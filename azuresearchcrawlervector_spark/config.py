@@ -69,23 +69,18 @@ class CrawlConfig:
     # _exact_topk_by_priority) — driver traffic drops to one count per
     # partition
     topk_range_threshold: int = 50_000
-    # J1-J3 incremental seen sketch: crawls whose maxPages reaches this
-    # size maintain a driver-held Bloom (sized for maxPages up front,
-    # merged with each wave's delta, snapshotted per wave for resume)
-    # instead of rebuilding the sketch from the full frontier-log
-    # history every wave — per-wave cost becomes O(delta), independent
-    # of crawl length. Below the threshold the plain exact anti-join is
-    # already cheaper than any sketch.
+    # J1-J3 seen sketch gate: the first wave that starts with at least
+    # this many pages fetched builds the sketch once from the frontier
+    # log; every later wave probes it and merges its own delta in
+    # (O(delta) per wave, snapshotted for resume). Below the gate the
+    # plain exact anti-join is already cheaper than any sketch, and no
+    # sketch work runs at all.
     seen_sketch_min_pages: int = 50_000
-    # seen-sketch layout: a crawl whose sized sketch fits under
-    # seen_sketch_cap_bits uses ONE driver-held Bloom, broadcast to
-    # probe tasks. Above the cap the engine switches to the SHARDED
-    # layout (operators/seen.ShardedBloom): power-of-two shards of
-    # seen_sketch_shard_bits each, snapshotted as per-shard files
-    # (dirty-only writes) and probed shard-aligned from the checkpoint
-    # store — no monolithic broadcast at any size. Defaults: cap 128 MB,
-    # shard 16 MB; at 10^10 keys × 16 bits that is 2048 shards.
-    seen_sketch_cap_bits: int = 1 << 30
+    # seen-sketch shard size. The sketch is sized for maxPages and cut
+    # into S = sized_bits // min(sized_bits, seen_sketch_shard_bits)
+    # power-of-two shards, each a snapshot file (dirty-only writes)
+    # probed shard-aligned from the checkpoint store. A sketch of up to
+    # 16 MB is one shard; 10^10 keys × 16 bits make 2048.
     seen_sketch_shard_bits: int = 1 << 27
     # enforce robots.txt Disallow prefixes on discovered links — opt-in;
     # the reference never enforces them (Abot's respect-robots flag

@@ -1,4 +1,4 @@
-"""URL-seen set at scale: per-partition Bloom sketches, broadcast-merged,
+"""URL-seen set at scale: a sharded Bloom sketch kept as snapshot files,
 with an exact confirm join so correctness is never probabilistic.
 
 The reference's seen set is an in-memory ``HashSet`` (one per crawler,
@@ -6,21 +6,24 @@ HeadlessBrowserCrawler.cs:14 / SitemapCrawler.cs:15 / Abot's internal
 repository) — fine for 100 pages, impossible at the 10^10-URL frontier the
 north_rule targets. Design here (north_star architecture):
 
-1. Each iteration, the newly-seen url_hash partition slices each build a
-   numpy Bloom bitmap (mapInPandas — Arrow batches, no per-row Python),
-   the driver ORs the per-partition bitmaps, and the merged sketch is
-   broadcast for the next iteration.
-2. The candidate wave is split by the sketch: rows the Bloom says
-   DEFINITELY-UNSEEN (no false negatives) bypass the join entirely; only
-   the "maybe seen" sliver takes the exact ``left_anti`` join against the
-   seen table. False positives therefore cost a join lookup, never a
-   wrongly-dropped URL — dedup stays EXACT while the shuffle join input
-   shrinks to ~the true-duplicate rate + FP rate.
+1. The sketch is S power-of-two shards of one Bloom layout, sharded by
+   ``pmod(url_hash, S)``. Each shard is an immutable snapshot file on
+   the checkpoint store; each wave's delta is merged in EXECUTOR-side
+   (merge_delta_sharded_files), rewriting only the shards it dirties,
+   so the driver holds nothing but the {shard: file} index. At 16
+   bits/key a 10^10-key sketch is 2048 shards of 16 MB; every sketch
+   up to 16 MB is a single shard (S = 1).
+2. The candidate wave is split by the sketch (ShardedSketchFiles):
+   rows the Bloom says DEFINITELY-UNSEEN (no false negatives) bypass the
+   join entirely; only the "maybe seen" sliver takes the exact
+   ``left_anti`` join against the seen table. False positives therefore
+   cost a join lookup, never a wrongly-dropped URL — dedup stays EXACT
+   while the shuffle join input shrinks to ~the true-duplicate rate + FP
+   rate.
 
-At 10^10 keys a single sketch at 16 bits/key is ~20 GB — too big to
-broadcast whole; the same design shards the sketch by ``pmod(url_hash,
-n_shards)`` with each executor holding only resident shards (documented
-scale path; the sharding math is identical, see ShardedBloom below).
+``BloomFilter``/``merged_sketch``/``split_by_sketch`` remain the
+one-shot broadcast sketch the wave uses to filter payload scans by its
+own (wave-sized) key set.
 """
 
 from __future__ import annotations
@@ -150,8 +153,7 @@ def anti_join_seen(
 
     definite-new rows (sketch says absent — Bloom has no false negatives)
     skip the join; only maybe-seen rows take the exact left_anti join.
-    ``sketch`` is a BloomFilter (broadcast probe), a ShardedSketchFiles
-    handle (shard-aligned file probe — the 10^10 path), or None.
+    ``sketch`` is a ShardedSketchFiles handle or None (plain anti-join).
     """
     if seen is None:
         return candidates
@@ -159,101 +161,13 @@ def anti_join_seen(
         return candidates.join(
             seen.select(hash_col).distinct(), on=hash_col, how="left_anti"
         )
-    if isinstance(sketch, ShardedSketchFiles):
-        tagged = sketch.split(candidates, hash_col)
-    else:
-        tagged = split_by_sketch(candidates, sketch, hash_col, broadcasts)
+    tagged = sketch.split(candidates, hash_col, broadcasts)
     definite_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
     confirmed_new = maybe.join(
         seen.select(hash_col).distinct(), on=hash_col, how="left_anti"
     )
     return definite_new.unionByName(confirmed_new)
-
-
-class ShardedBloom:
-    """Scale path for 10^10 keys: shard the sketch by pmod(url_hash, S).
-
-    Each shard is an independent BloomFilter; an executor probing a hash
-    touches exactly one shard. At 16 bits/key and 2048 shards, a
-    10^10-key seen set is 32 GB total / 16 MB per shard — the engine
-    never broadcasts it: shards are SNAPSHOT FILES on the checkpoint
-    store, probe tasks are repartitioned by shard and read only theirs
-    (split_by_sharded_files below), and only DIRTY shards are rewritten
-    per wave. The driver holds the shards resident for the incremental
-    merge (32 GB = a driver-sized box at the extreme; an mmap swap
-    touches only this class).
-
-    ``n_shards`` MUST be a power of two: shard id is computed as
-    uint64(hash) % S in numpy and pmod(hash, S) in Spark SQL, and the
-    two agree for signed hashes exactly when S divides 2^64.
-    """
-
-    def __init__(self, n_shards: int, n_bits_per_shard: int, k: int = 7):
-        assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of 2"
-        self.n_shards = n_shards
-        self.n_bits_per_shard = n_bits_per_shard
-        self.k = k
-        self.shards = [BloomFilter(n_bits_per_shard, k) for _ in range(n_shards)]
-
-    def _sid(self, hashes: np.ndarray) -> np.ndarray:
-        return (hashes.astype(np.uint64) % np.uint64(self.n_shards)).astype(np.int64)
-
-    def add_many(self, hashes: np.ndarray) -> None:
-        sid = self._sid(hashes)
-        for s in np.unique(sid):
-            self.shards[int(s)].add_many(hashes[sid == s])
-
-    def contains_many(self, hashes: np.ndarray) -> np.ndarray:
-        out = np.zeros(len(hashes), dtype=bool)
-        sid = self._sid(np.asarray(hashes))
-        for s in np.unique(sid):
-            m = sid == s
-            out[m] = self.shards[int(s)].contains_many(np.asarray(hashes)[m])
-        return out
-
-    def merge_delta_(self, other: "ShardedBloom") -> list[int]:
-        """OR another sharded sketch in; returns the DIRTY shard ids
-        (shards whose bits actually changed) so the caller snapshots
-        only those — per-wave sketch write I/O is bounded by the delta's
-        shard coverage, not the sketch size."""
-        assert other.n_shards == self.n_shards
-        dirty = []
-        for s, (mine, theirs) in enumerate(zip(self.shards, other.shards)):
-            if np.any(theirs.bits & ~mine.bits):
-                np.bitwise_or(mine.bits, theirs.bits, out=mine.bits)
-                dirty.append(s)
-        return dirty
-
-
-def merged_sharded_sketch(df: DataFrame, hash_col: str, n_shards: int,
-                          bits_per_shard: int, k: int = 7) -> ShardedBloom:
-    """Distributed build of a ShardedBloom: repartition by shard id (each
-    shard lands in exactly one task), build per-shard bitmaps in numpy,
-    collect one (shard, bitmap) row per non-empty shard for the driver
-    OR-merge. Collected bytes = non-empty shards × shard size."""
-    spark = df.sparkSession
-    P = min(n_shards, spark.sparkContext.defaultParallelism)
-    parted = df.select(hash_col).repartition(
-        P, F.pmod(F.col(hash_col), F.lit(n_shards)))
-
-    def build(batches):
-        local: dict[int, BloomFilter] = {}
-        for pdf in batches:
-            h = pdf[hash_col].to_numpy(dtype=np.int64)
-            sid = (h.astype(np.uint64) % np.uint64(n_shards)).astype(np.int64)
-            for s in np.unique(sid):
-                bf = local.setdefault(int(s), BloomFilter(bits_per_shard, k))
-                bf.add_many(h[sid == s])
-        yield pd.DataFrame({
-            "shard": np.asarray(list(local.keys()), dtype=np.int32),
-            "bitmap": [b.bits.tobytes() for b in local.values()],
-        })
-
-    sk = ShardedBloom(n_shards, bits_per_shard, k)
-    for r in parted.mapInPandas(build, "shard int, bitmap binary").collect():
-        sk.shards[int(r["shard"])].merge_(r["bitmap"])
-    return sk
 
 
 def merge_delta_sharded_files(
@@ -283,9 +197,8 @@ def merge_delta_sharded_files(
     rename with version-stamped names, so task retries/speculation
     rewrite identical content harmlessly.
 
-    File naming matches plans.checkpoint.SnapshotStore.write_sketch_shard
-    (``shard%05d_v%05d.bin`` under the store's seen_sketch dir) so
-    driver- and executor-written shards share one namespace.
+    Files are named ``shard%05d_v%05d.bin`` under ``out_dir`` (the
+    store's seen_sketch dir, plans.checkpoint.SnapshotStore.sketch_dir).
 
     Expected shards per task ≈ 1 (numPartitions = n_shards), so task
     memory is ~one shard bitmap; worst-case hash collisions put a small
@@ -299,7 +212,7 @@ def merge_delta_sharded_files(
     # agree only when n_shards divides 2^64.  A non-power-of-two n_shards
     # would split one shard's rows across two tasks whose last rename
     # silently drops the other's bits — lost dedup.  Same invariant as
-    # ShardedBloom / ShardedSketchFiles.
+    # ShardedSketchFiles.
     assert n_shards & (n_shards - 1) == 0, "n_shards must be a power of 2"
 
     spark = df.sparkSession
@@ -366,6 +279,8 @@ class ShardedSketchFiles:
     only its shards' files — read from the (shared) checkpoint store
     and cached per executor process. No driver broadcast of sketch bits
     at any size; per-task sketch traffic is bounded by shard size.
+    With one shard every row is already shard-aligned, so the probe
+    keeps the candidates' own partitioning (and width).
     A shard absent from the index has never been written = empty =
     definitely-unseen (correct: dirty-only snapshots skip untouched
     shards, and an untouched shard holds no keys).
@@ -379,14 +294,20 @@ class ShardedSketchFiles:
         self.index = {int(s): p for s, p in index.items()}
         self.k = k
 
-    def split(self, candidates: DataFrame, hash_col: str = "url_hash") -> DataFrame:
+    def split(self, candidates: DataFrame, hash_col: str = "url_hash",
+              broadcasts: list | None = None) -> DataFrame:
+        """Add ``maybe_seen``; ``broadcasts`` as in split_by_sketch."""
         from pyspark.sql.types import BooleanType, StructField, StructType
         spark = candidates.sparkSession
         n_shards, n_bits, k = self.n_shards, self.n_bits_per_shard, self.k
         b_index = spark.sparkContext.broadcast(self.index)  # tiny dict
-        P = min(n_shards, spark.sparkContext.defaultParallelism)
-        parted = candidates.repartition(
-            P, F.pmod(F.col(hash_col), F.lit(n_shards)))
+        if broadcasts is not None:
+            broadcasts.append(b_index)
+        parted = candidates
+        if n_shards > 1:
+            P = min(n_shards, spark.sparkContext.defaultParallelism)
+            parted = candidates.repartition(
+                P, F.pmod(F.col(hash_col), F.lit(n_shards)))
         out_schema = StructType(
             candidates.schema.fields + [StructField("maybe_seen", BooleanType())])
 

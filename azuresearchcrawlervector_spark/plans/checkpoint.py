@@ -14,10 +14,17 @@ Table layout per crawl under ``root/``:
                                    set is the active queue, small relative
                                    to the cumulative frontier)
   frontier_log/delta_{iter}.parquet — append-only history of every frontier
-                                   row with its final state (audit/lineage)
-  seen/delta_{iter}.parquet      — append-only seen-set deltas
+                                   row with its final state (audit/lineage;
+                                   the seen set is a projection of it)
   documents/delta_{iter}.parquet — append-only output docs
   metrics/delta_{iter}.parquet   — append-only per-partition metrics
+  embed_queue/delta_{iter}.parquet — documents deferred past the per-wave
+                                   embed budget (full rewrite, like pending)
+  seen_sketch/shard{s:05d}_v{iter:05d}.bin — seen-sketch shard snapshots
+                                   (dirty shards only), plus a
+                                   v{iter:05d}.json {shard: file} index
+  compact_*/compact2_* files in the delta directories are the L1/L2
+  compaction segments of those tables
 """
 
 from __future__ import annotations
@@ -29,8 +36,6 @@ import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-
-DELTA_TABLES = ("seen", "documents", "metrics", "frontier_log")
 
 # committed manifests ONLY — a crash between tmp write and os.replace
 # leaves a (possibly truncated) vNNNNN.json.tmp that must never be read
@@ -51,8 +56,10 @@ class Manifest:
     metrics_rows: list = field(default_factory=list)
     finished: bool = False
     config_fingerprint: str = ""
-    # incremental seen-sketch snapshot (Bloom bits through this wave);
-    # None = rebuild from the frontier log on resume (old manifests)
+    # seen-sketch snapshot: the JSON {shard: file} index of the sketch
+    # through this wave. None before the sketch gate; any other value
+    # (a missing file, or the single .bin an older engine build wrote)
+    # makes the next wave rebuild the sketch from the frontier log
     seen_sketch_path: str | None = None
     # P3 embed budget: documents fetched but deferred past the per-wave
     # embed cap (full rewrite per wave, like pending)
@@ -117,38 +124,17 @@ class SnapshotStore:
                 os.remove(os.path.join(mdir, f))
 
     # -- seen-sketch snapshots ------------------------------------------------
-    def sketch_path(self, iteration: int) -> str:
-        return os.path.join(self.root, "seen_sketch", f"v{iteration:05d}.bin")
-
-    def write_sketch(self, bits: bytes, iteration: int) -> str:
-        p = self.sketch_path(iteration)
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(bits)
-        os.replace(tmp, p)
-        return p
-
     def read_sketch(self, path: str | None) -> bytes | None:
         if not path or not os.path.exists(path):
             return None
         with open(path, "rb") as fh:
             return fh.read()
 
-    # sharded seen-sketch (operators/seen.ShardedBloom): per-shard bin
-    # files, versioned so they're immutable (executor probe caches key on
-    # path), plus a tiny JSON index {shard: latest bin path} per wave —
-    # only DIRTY shards get a new file, clean shards keep their old path
-    def write_sketch_shard(self, bits: bytes, shard: int, iteration: int) -> str:
-        p = os.path.join(self.root, "seen_sketch",
-                         f"shard{shard:05d}_v{iteration:05d}.bin")
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        tmp = p + ".tmp"
-        with open(tmp, "wb") as fh:
-            fh.write(bits)
-        os.replace(tmp, p)
-        return p
-
+    # sharded seen-sketch (operators/seen.merge_delta_sharded_files):
+    # per-shard bin files, versioned so they're immutable (executor probe
+    # caches key on path), plus a tiny JSON index {shard: latest bin path}
+    # per wave — only DIRTY shards get a new file, clean shards keep
+    # their old path
     def sketch_dir(self) -> str:
         """Shard-file directory for the executor-side merge
         (operators/seen.merge_delta_sharded_files writes here directly)."""

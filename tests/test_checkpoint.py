@@ -128,6 +128,93 @@ def test_incremental_seen_sketch_exact_and_resumable(spark, tmp_path):
         assert {r["url"] for r in res.seen(spark).collect()} == sim.seen
 
 
+def test_seen_sketch_gate_crossing(spark, tmp_path):
+    """The sketch starts on the first wave that begins with
+    seen_sketch_min_pages fetched: no index before it, the crawl still
+    equals the simulator, and a crawl killed right after the crossing
+    resumes identical."""
+    import os
+    from dataclasses import replace
+
+    from azuresearchcrawlervector_spark.simulator import simulate
+
+    g = website1_graph()
+    cfg = replace(CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD),
+                  seen_sketch_min_pages=2)
+    pages = pages_df(spark, g)
+    full = CrawlEngine(spark, pages, cfg, str(tmp_path / "full"),
+                       validate_images=False).run()
+    m1, m2, m3 = (full.store.manifest_at(k) for k in (1, 2, 3))
+    # wave 1 fetches the root alone, wave 2 its children: the gate lies
+    # between, so wave 3 is the first to build and probe the sketch
+    assert m1.pages_fetched < cfg.seen_sketch_min_pages <= m2.pages_fetched
+    assert m1.seen_sketch_path is None and m2.seen_sketch_path is None
+    assert m3.seen_sketch_path.endswith("v00003.json")
+    sim = simulate(g, cfg)
+    assert sorted((r["seq"], r["url"]) for r in full.documents(spark).collect()) \
+        == sorted((d["seq"], d["url"]) for d in sim.documents)
+    assert {r["url"] for r in full.seen(spark).collect()} == sim.seen
+
+    ck = str(tmp_path / "kill")
+    CrawlEngine(spark, pages, cfg, ck, validate_images=False,
+                max_iters=2).run()
+    assert not os.path.exists(os.path.join(ck, "seen_sketch"))
+    # killed right after the crossing wave, then resumed in fresh engines
+    CrawlEngine(spark, pages, cfg, ck, validate_images=False,
+                max_iters=3).run(resume=True)
+    m = SnapshotStore(ck).latest()
+    assert m.iter == 3 and not m.finished and m.seen_sketch_path
+    resumed = CrawlEngine(spark, pages, cfg, ck,
+                          validate_images=False).run(resume=True)
+    assert _collect_state(spark, resumed) == _collect_state(spark, full)
+
+
+def test_resume_from_monolithic_sketch_rebuilds(spark, tmp_path):
+    """A manifest whose seen_sketch_path is the single Bloom .bin an
+    older engine build wrote resumes through the frontier-log rebuild
+    and equals an uninterrupted crawl."""
+    import os
+    import shutil
+    from dataclasses import replace
+
+    from azuresearchcrawlervector_spark.operators.seen import (
+        BloomFilter, merged_sketch,
+    )
+    from azuresearchcrawlervector_spark.plans.crawl import seen_from_log
+
+    g = website1_graph()
+    cfg = replace(CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD),
+                  seen_sketch_min_pages=1)
+    pages = pages_df(spark, g)
+    full = CrawlEngine(spark, pages, cfg, str(tmp_path / "full"),
+                       validate_images=False).run()
+
+    ck = str(tmp_path / "legacy")
+    CrawlEngine(spark, pages, cfg, ck, validate_images=False,
+                max_iters=3).run()
+    store = SnapshotStore(ck)
+    m = store.latest()
+    assert m.iter == 3 and not m.finished
+    # replace the snapshot with what an older build left: one Bloom file
+    shutil.rmtree(os.path.join(ck, "seen_sketch"))
+    seen = seen_from_log(store.read_table(spark, m, "frontier_log"),
+                         cfg.seen_on_effective)
+    n_bits = BloomFilter.sized_for(cfg.max_pages, cfg.bloom_bits_per_key).n_bits
+    legacy = os.path.join(ck, "seen_sketch", "v00003.bin")
+    os.makedirs(os.path.dirname(legacy))
+    with open(legacy, "wb") as fh:
+        fh.write(merged_sketch(seen, "url_hash", n_bits).bits.tobytes())
+    m.seen_sketch_path = legacy
+    store.commit(m)
+
+    resumed = CrawlEngine(spark, pages, cfg, ck,
+                          validate_images=False).run(resume=True)
+    assert _collect_state(spark, resumed) == _collect_state(spark, full)
+    # the rebuild snapshotted the seen set through the resumed manifest
+    assert os.path.exists(os.path.join(ck, "seen_sketch", "v00003.json"))
+    assert resumed.manifest.seen_sketch_path.endswith(".json")
+
+
 def test_crawl_timeout_leaves_resumable_state(spark, tmp_path):
     """P5 (AbotCrawler.cs:165 analog): the wall-clock guard stops the
     loop mid-crawl with finished=False — exactly the state a kill

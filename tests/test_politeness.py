@@ -8,7 +8,7 @@ from azuresearchcrawlervector_spark.operators.politeness import (
     apply_politeness, salted_repartition,
 )
 from azuresearchcrawlervector_spark.operators.seen import (
-    BloomFilter, ShardedBloom, anti_join_seen, merged_sketch,
+    BloomFilter, ShardedSketchFiles, anti_join_seen, merge_delta_sharded_files,
 )
 from azuresearchcrawlervector_spark.plans.crawl import CrawlEngine
 from azuresearchcrawlervector_spark.simulator import simulate
@@ -71,19 +71,13 @@ def test_bloom_no_false_negatives_and_low_fp():
     assert fp < 0.01, fp
 
 
-def test_sharded_bloom_equivalent():
-    rng = np.random.default_rng(7)
-    keys = rng.integers(-(2**62), 2**62, size=5000, dtype=np.int64)
-    sb = ShardedBloom(n_shards=16, n_bits_per_shard=1 << 14)
-    sb.add_many(keys)
-    assert sb.contains_many(keys).all()
-
-
-def test_anti_join_seen_exact_despite_sketch(spark):
+def test_anti_join_seen_exact_despite_sketch(spark, tmp_path):
     cand = spark.createDataFrame([(i, f"u{i}") for i in range(1000)], "url_hash long, url string")
     seen = spark.createDataFrame([(i, f"u{i}", 0) for i in range(0, 1000, 2)],
                                  "url_hash long, url string, iter int")
-    sketch = merged_sketch(seen, "url_hash", 1 << 14)
+    index = merge_delta_sharded_files(
+        seen, "url_hash", 1, 1 << 14, {}, str(tmp_path / "sk"), 0)
+    sketch = ShardedSketchFiles(1, 1 << 14, index)
     out = anti_join_seen(cand, seen, sketch)
     got = sorted(r["url_hash"] for r in out.collect())
     assert got == list(range(1, 1000, 2))  # exactly the odd (unseen) keys

@@ -1,10 +1,9 @@
-"""Sharded seen-sketch: the 10^10-key path, wired into the engine.
+"""Sharded seen-sketch: the engine's one seen-sketch layout.
 
-Contract (VERDICT round-2 #2): above seen_sketch_cap_bits the engine
-switches to power-of-two Bloom shards snapshotted as per-shard files
+Contract: power-of-two Bloom shards snapshotted as per-shard files
 (dirty shards only) and probed shard-aligned from the checkpoint store
-— no monolithic broadcast — with crawl output identical to the
-monolithic/plain paths and bit-identical resume.
+— no monolithic broadcast — with crawl output identical to the plain
+exact anti-join and bit-identical resume.
 """
 
 import json
@@ -17,34 +16,16 @@ from pyspark.sql import functions as F
 
 from azuresearchcrawlervector_spark.config import CrawlConfig, CrawlMode
 from azuresearchcrawlervector_spark.operators.seen import (
-    BloomFilter, ShardedBloom, ShardedSketchFiles, anti_join_seen,
-    merged_sharded_sketch,
+    ShardedSketchFiles, anti_join_seen, merge_delta_sharded_files,
 )
 from azuresearchcrawlervector_spark.plans.crawl import CrawlEngine
 from azuresearchcrawlervector_spark.sources.fixtures import test_website as website1_graph
 from azuresearchcrawlervector_spark.sources.synthetic import pages_df
 
-# max_pages=2048 at 16 bits/key sizes the sketch to 2^15 bits; cap 2^13
-# forces the sharded layout with 2^13-bit shards -> 4 shards
+# max_pages=2048 at 16 bits/key sizes the sketch to 2^15 bits; 2^13-bit
+# shards -> 4 shards
 SHARDED_KW = dict(max_pages=2048, seen_sketch_min_pages=1,
-                  seen_sketch_cap_bits=1 << 13,
                   seen_sketch_shard_bits=1 << 13)
-
-
-def test_sharded_bloom_requires_power_of_two():
-    with pytest.raises(AssertionError):
-        ShardedBloom(3, 1 << 13)
-
-
-def test_merge_delta_reports_dirty_shards_only():
-    sk = ShardedBloom(4, 1 << 13)
-    sk.add_many(np.array([4, 8, 12], dtype=np.int64))       # all shard 0
-    delta = ShardedBloom(4, 1 << 13)
-    delta.add_many(np.array([5, 9], dtype=np.int64))        # all shard 1
-    assert sk.merge_delta_(delta) == [1]
-    # re-merging the same delta changes nothing -> no dirty shards
-    assert sk.merge_delta_(delta) == []
-    assert sk.contains_many(np.array([4, 5, 9, 12], dtype=np.int64)).all()
 
 
 def test_sharded_file_probe_no_false_negatives(spark, tmp_path):
@@ -57,16 +38,9 @@ def test_sharded_file_probe_no_false_negatives(spark, tmp_path):
                              rng.integers(-(1 << 62), 1 << 62, size=300,
                                           dtype=np.int64)])
     n_shards, shard_bits = 8, 1 << 13
-    sk = merged_sharded_sketch(
+    index = merge_delta_sharded_files(
         spark.createDataFrame([(int(h),) for h in seen_h], "url_hash long"),
-        "url_hash", n_shards, shard_bits)
-    index = {}
-    for s, shard in enumerate(sk.shards):
-        if shard.bits.any():
-            p = str(tmp_path / f"shard{s}.bin")
-            with open(p, "wb") as fh:
-                fh.write(shard.bits.tobytes())
-            index[s] = p
+        "url_hash", n_shards, shard_bits, {}, str(tmp_path / "sk"), 0)
     handle = ShardedSketchFiles(n_shards, shard_bits, index)
     cand = spark.createDataFrame([(int(h),) for h in cand_h], "url_hash long")
     seen = spark.createDataFrame([(int(h),) for h in seen_h], "url_hash long")
@@ -77,15 +51,27 @@ def test_sharded_file_probe_no_false_negatives(spark, tmp_path):
     assert got == want
 
 
+def test_single_shard_probe_keeps_partitioning(spark, tmp_path):
+    """S = 1 (every sketch up to one shard): all rows are shard-aligned,
+    so the probe keeps the candidates' partitioning instead of pulling
+    the whole probe into one task."""
+    seen = spark.createDataFrame([(h,) for h in range(0, 400, 2)],
+                                 "url_hash long")
+    index = merge_delta_sharded_files(
+        seen, "url_hash", 1, 1 << 13, {}, str(tmp_path / "s1"), 0)
+    cand = spark.range(400).select(
+        F.col("id").alias("url_hash")).repartition(4)
+    tagged = ShardedSketchFiles(1, 1 << 13, index).split(cand)
+    assert tagged.rdd.getNumPartitions() == 4
+    maybe = {r["url_hash"] for r in tagged.collect() if r["maybe_seen"]}
+    assert set(range(0, 400, 2)) <= maybe   # no false negatives
+
+
 def test_merge_delta_sharded_files_dirty_only(spark, tmp_path):
     """Executor-side file merge: dirty shards get a new version file,
     clean shards keep their previous path, re-merging the same delta
     writes nothing, and the merged snapshot probes without false
     negatives."""
-    from azuresearchcrawlervector_spark.operators.seen import (
-        merge_delta_sharded_files,
-    )
-
     n_shards, shard_bits = 8, 1 << 13
     out = str(tmp_path / "sk")
     base = spark.createDataFrame(
@@ -160,7 +146,6 @@ def test_engine_sharded_driver_not_resident(spark, tmp_path):
                       str(tmp_path / "nr"), validate_images=False,
                       max_iters=1000)
     res = eng.run()
-    assert eng._seen_sketch is None          # never materialized
     assert eng._sketch_index                 # index-only driver state
     assert len(res.documents(spark).collect()) == 19
 
@@ -203,10 +188,6 @@ def test_engine_sharded_resume_identical(spark, tmp_path):
 
 def test_merge_delta_sharded_files_empty_delta(spark, tmp_path):
     """An empty wave delta writes nothing and returns no dirty shards."""
-    from azuresearchcrawlervector_spark.operators.seen import (
-        merge_delta_sharded_files,
-    )
-
     out = str(tmp_path / "sk0")
     empty = spark.createDataFrame([], "url_hash long")
     assert merge_delta_sharded_files(
@@ -218,9 +199,6 @@ def test_merge_delta_sharded_files_rejects_non_power_of_two(spark, tmp_path):
     # round-4 advice: Spark's pmod partitioner and the task-side uint64
     # modulo agree on negative hashes only for power-of-two shard
     # counts; anything else must be refused loudly, not lose bits
-    from azuresearchcrawlervector_spark.operators.seen import (
-        merge_delta_sharded_files,
-    )
     df = spark.createDataFrame([(i,) for i in range(8)], "url_hash long")
     with pytest.raises(AssertionError):
         merge_delta_sharded_files(

@@ -1,11 +1,11 @@
-"""Sharded vs monolithic seen-sketch at crawl scale (VERDICT round-2 #2
-"done" bar: a bench row showing sketch traffic bounded by shard size).
+"""Seen-sketch shard count at crawl scale: default sizing vs 64 shards.
 
-Runs the SAME 150k-URL crawl twice: once with the monolithic driver
-Bloom (broadcast probe), once with the sharded layout forced (cap tiny
-→ 64 shards), and reports wall time, crawl output equality, per-wave
-sketch snapshot bytes, and the per-task probe footprint (= one shard
-file vs the whole sketch broadcast to every executor).
+Runs the SAME 150k-URL crawl twice on the one seen-sketch layout: once
+with default sizing (the sketch fits one shard, S = 1), once with the
+shard size forced to 1/64 of the sketch (S = 64), and reports wall time,
+crawl output equality, per-wave sketch snapshot bytes, the per-task
+probe footprint (the largest shard file), and the per-wave merge I/O of
+the sharded run against each wave delta's shard coverage.
 
 Usage: python tools/sharded_sketch_bench.py [n_urls]
 Prints one JSON line; recorded in BENCH/BASELINE.md.
@@ -29,6 +29,7 @@ def main():
     from dataclasses import replace
 
     from azuresearchcrawlervector_spark.config import CrawlConfig, CrawlMode
+    from azuresearchcrawlervector_spark.operators.seen import BloomFilter
     from azuresearchcrawlervector_spark.plans.crawl import CrawlEngine
     from azuresearchcrawlervector_spark.session import get_spark
     from azuresearchcrawlervector_spark.sources.synthetic import (
@@ -51,10 +52,10 @@ def main():
         max_depth=64, iter_window_ms=3_600_000, salt_partitions=16,
         seen_sketch_min_pages=1_000,
     )
-    # sized sketch for 150k keys = 2^22 bits; cap 2^16 forces 64 shards
-    # of 2^16 bits (8 KB) each
-    sharded = replace(base, seen_sketch_cap_bits=1 << 16,
-                      seen_sketch_shard_bits=1 << 16)
+    # sized sketch for 150k keys = 2^22 bits: one shard by default;
+    # 2^16-bit (8 KB) shards make 64
+    shard_bits = BloomFilter.sized_for(n, base.bloom_bits_per_key).n_bits // 64
+    sharded = replace(base, seen_sketch_shard_bits=shard_bits)
 
     def run(tag, cfg):
         t0 = time.monotonic()
@@ -77,12 +78,9 @@ def main():
             "iters": res.manifest.iter,
             "sketch_files": len(bins),
             "sketch_bytes_total": total_bytes,
-            "probe_unit_bytes": max_file,  # per-task read (shard) or
-                                           # per-executor broadcast (mono)
+            "probe_unit_bytes": max_file,  # per-task read: one shard
+            "n_shards": eng._n_shards,
             "docs": res.manifest.docs_emitted,
-            # round-3 VERDICT #1: in sharded mode the driver must hold
-            # NO sketch bits — only the {shard: path} index
-            "driver_sketch_resident": eng._seen_sketch is not None,
         }, res, eng
 
     def wave_merge_io(res, eng, tag):
@@ -106,23 +104,26 @@ def main():
         waves = [{"iter": v, "dirty_files": w,
                   "delta_cover": cover.get(v, 0)}
                  for v, w in sorted(written.items())]
+        # the first version is the gate's one-time build from the whole
+        # frontier log, not a merge of one wave's delta
+        build, waves = waves[0], waves[1:]
         return {
+            "gate_build": build,
             "waves": waves,
             "bounded_by_delta": all(
                 w["dirty_files"] <= max(w["delta_cover"], 1)
                 for w in waves),
         }
 
-    mono, _, _ = run("mono", base)
+    one, _, _ = run("one", base)
     shard, sres, seng = run("shard", sharded)
     merge_io = wave_merge_io(sres, seng, "shard")
-    assert mono["urls"] == shard["urls"] == n
-    assert mono["docs"] == shard["docs"]
-    assert not shard["driver_sketch_resident"]
+    assert one["n_shards"] == 1 and shard["n_shards"] == 64
+    assert one["urls"] == shard["urls"] == n
+    assert one["docs"] == shard["docs"]
     assert merge_io["bounded_by_delta"]
-    out = {"n_urls": n, "monolithic": mono, "sharded": shard,
-           "n_shards": 64, "shard_bytes": (1 << 16) // 8,
-           "sharded_merge_io": merge_io}
+    out = {"n_urls": n, "one_shard": one, "sharded": shard,
+           "shard_bytes": shard_bits // 8, "sharded_merge_io": merge_io}
     print(json.dumps(out))
 
 
