@@ -36,10 +36,29 @@ import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    IntegerType, LongType, StringType, StructField, StructType,
+)
 
 # committed manifests ONLY — a crash between tmp write and os.replace
 # leaves a (possibly truncated) vNNNNN.json.tmp that must never be read
 _MANIFEST_RE = re.compile(r"v\d{5}\.json")
+
+# the pending table's columns: the engine writes exactly these, and
+# read_pending reads with them, so no wave runs a schema-inference job
+PENDING_SCHEMA = StructType([
+    StructField("url", StringType(), False),
+    StructField("url_hash", LongType(), False),
+    StructField("host", StringType(), True),
+    StructField("root_host", StringType(), True),
+    StructField("depth", IntegerType(), False),
+    StructField("path", StringType(), False),
+    StructField("priority", StringType(), False),
+    StructField("parent_url", StringType(), True),
+    StructField("link_pos", IntegerType(), True),
+    StructField("iter_added", IntegerType(), False),
+    StructField("attempts", IntegerType(), False),  # P4 retry counter
+])
 
 
 @dataclass
@@ -214,7 +233,7 @@ class SnapshotStore:
     def read_pending(self, spark: SparkSession, m: Manifest) -> DataFrame | None:
         if not m.pending_path:
             return None
-        return spark.read.parquet(m.pending_path)
+        return spark.read.schema(PENDING_SCHEMA).parquet(m.pending_path)
 
     def read_table(self, spark: SparkSession, m: Manifest, table: str) -> DataFrame | None:
         paths = m.deltas.get(table) or []

@@ -43,9 +43,6 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType, LongType, StringType, StructField, StructType,
-)
 
 from ..config import CrawlConfig, CrawlMode, SeenOn
 from ..core.urls import canonicalize, host_of
@@ -61,21 +58,7 @@ from ..operators.seen import (
     BloomFilter, ShardedSketchFiles, anti_join_seen, merge_delta_sharded_files,
     merged_sketch, split_by_sketch,
 )
-from .checkpoint import Manifest, SnapshotStore
-
-PENDING_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("url_hash", LongType(), False),
-    StructField("host", StringType(), True),
-    StructField("root_host", StringType(), True),
-    StructField("depth", IntegerType(), False),
-    StructField("path", StringType(), False),
-    StructField("priority", StringType(), False),
-    StructField("parent_url", StringType(), True),
-    StructField("link_pos", IntegerType(), True),
-    StructField("iter_added", IntegerType(), False),
-    StructField("attempts", IntegerType(), False),  # P4 retry counter
-])
+from .checkpoint import PENDING_SCHEMA, Manifest, SnapshotStore
 
 SEEN_SCHEMA = "url_hash long, url string, iter int"
 
@@ -260,7 +243,13 @@ class CrawlEngine:
                 "html", F.coalesce("html_rendered", "html"))
         self.pages = pages
         self.images = images
-        self.robots = robots
+        # every wave broadcasts the robots table into the politeness
+        # join: cache it so a wave does not re-run its lineage (for a
+        # createDataFrame table that is a Python job per wave). The
+        # max(crawl_delay_ms) collect below fills the cache, so engine
+        # construction still runs one job; persist (not a checkpoint)
+        # keeps the lineage, so a lost executor recomputes the table.
+        self.robots = robots.persist() if robots is not None else None
         self.cfg = cfg
         self.store = SnapshotStore(checkpoint_dir)
         self.seeds = seeds or [cfg.root_url]
@@ -290,8 +279,8 @@ class CrawlEngine:
         # wave cost core-scalable.
         from ..config import DEFAULT_CRAWL_DELAY_MS
         max_delay = DEFAULT_CRAWL_DELAY_MS
-        if robots is not None:
-            row = robots.agg(F.max("crawl_delay_ms")).collect()[0][0]
+        if self.robots is not None:
+            row = self.robots.agg(F.max("crawl_delay_ms")).collect()[0][0]
             max_delay = max(int(row or 0), DEFAULT_CRAWL_DELAY_MS)
         self._min_host_budget = max(1, cfg.iter_window_ms // max_delay)
         # payload bucket pruning (sources/payload.py): active when the
@@ -349,20 +338,22 @@ class CrawlEngine:
         return ShardedSketchFiles(self._n_shards, self._shard_bits,
                                   dict(self._sketch_index))
 
-    def _merge_seen_delta(self, seen_delta: DataFrame, i: int) -> str:
-        """Fold wave ``i``'s seen delta into the sketch snapshot and
-        return the new index file. File-side merge: each task ORs its
+    def _merge_seen_delta(self, seen_delta: DataFrame,
+                          i: int) -> tuple[dict[int, str], str]:
+        """Fold wave ``i``'s seen delta into the sketch snapshot; return
+        the new index and its file. File-side merge: each task ORs its
         delta shard into the previous snapshot file and writes the new
         version DIRECTLY to the store; clean shards keep their previous
         (immutable) file. Per-wave snapshot I/O is bounded by the
         delta's shard coverage and the driver handles only the
-        {shard: path} rows."""
+        {shard: path} rows. The engine adopts the index only once the
+        wave's manifest has committed (_commit)."""
         dirty = merge_delta_sharded_files(
             seen_delta.select("url_hash"), "url_hash",
             self._n_shards, self._shard_bits,
             self._sketch_index, self.store.sketch_dir(), i)
-        self._sketch_index.update(dirty)
-        return self.store.write_sketch_index(self._sketch_index, i)
+        index = {**self._sketch_index, **dirty}
+        return index, self.store.write_sketch_index(index, i)
 
     # ------------------------------------------------------------------ seed
     def _seed_pending(self) -> DataFrame:
@@ -490,8 +481,13 @@ class CrawlEngine:
             if small_wave:
                 img_keys = keys_src.select("image_id").where(
                     F.col("image_id").isNotNull()).distinct()
+                # at most one decode task per core: the matched sliver
+                # is small, and each images-scan split would otherwise
+                # be its own Python task (a second round of worker
+                # start-up once the splits outnumber the cores)
                 img_matched = images_src.join(
-                    F.broadcast(img_keys), on="image_id", how="inner")
+                    F.broadcast(img_keys), on="image_id", how="inner",
+                ).coalesce(self.spark.sparkContext.defaultParallelism)
             else:
                 img_sketch = merged_sketch(
                     keys_src.select(F.xxhash64("image_id").alias("ih")), "ih",
@@ -590,10 +586,11 @@ class CrawlEngine:
     def _wave(self, m: Manifest) -> Manifest:
         """One frontier wave as named stages. The stages before _commit
         build plans (plus the tiny driver collects that top-K, bucket
-        pruning, wave sketches and visit order need); _commit runs the
-        writes: frontier_log ∥ documents, then the three-way tail
-        (stats readback ∥ pending' ∥ sketch merge), then the manifest.
-        Metrics ride in the manifest commit."""
+        pruning, wave sketches and visit order need); _commit runs ONE
+        concurrent write phase — (frontier_log → stats readback) ∥
+        documents ∥ pending' ∥ sketch merge — then the manifest.
+        Metrics ride in the manifest commit. The wave's caches and
+        broadcasts are released even when a write fails."""
         if m.pages_fetched >= self.cfg.max_pages or m.pending_count == 0:
             return self._finish(m)
         w = _Wave(m, i=m.iter + 1, t0=time.monotonic(),
@@ -606,19 +603,23 @@ class CrawlEngine:
             phases.append(f"{name}={time.monotonic() - t:.2f}")
             return out
 
-        pending = self.store.read_pending(self.spark, m)
-        due, budget_due, budget_carry, capped = stage(
-            "schedule", self._schedule, pending)
-        fetch = stage("fetch", self._fetch, pending, due)
-        ok, extracted = stage("extract", self._extract, fetch)
-        docs_out, carry_docs = stage("emit_docs", self._emit_docs, extracted)
-        children = stage("discover_links", self._discover_links, extracted)
-        pending_next, seen_delta, sketch = stage(
-            "dedup", self._dedup, children, fetch, ok,
-            budget_due, budget_carry, capped)
-        m2 = stage("commit", self._commit, fetch, docs_out, carry_docs,
-                   pending_next, seen_delta, sketch)
-        w.release()
+        try:
+            pending = self.store.read_pending(self.spark, m)
+            due, budget_due, budget_carry, capped = stage(
+                "schedule", self._schedule, pending)
+            fetch = stage("fetch", self._fetch, pending, due)
+            ok, extracted = stage("extract", self._extract, fetch)
+            docs_out, carry_docs = stage(
+                "emit_docs", self._emit_docs, extracted)
+            children = stage(
+                "discover_links", self._discover_links, extracted)
+            pending_next, seen_delta, sketch = stage(
+                "dedup", self._dedup, children, fetch, ok,
+                budget_due, budget_carry, capped)
+            m2 = stage("commit", self._commit, fetch, docs_out, carry_docs,
+                       pending_next, seen_delta, sketch)
+        finally:
+            w.release()
         if m2 is None:
             # nothing was due: politeness budgets can't starve forever
             # (budget ≥ 1/host), so the frontier is exhausted. Finish
@@ -806,24 +807,22 @@ class CrawlEngine:
         # assignment is frozen) → global rank = sum of earlier partitions'
         # sizes + rank within the partition. One tiny extra action (the
         # per-partition counts off the cache); every window below is
-        # partitioned, so no WindowExec single-partition warning.
+        # partitioned, so no WindowExec single-partition warning. The
+        # count collect also fills the `extracted` cache before _commit's
+        # concurrent writes read it. The offsets are a literal map keyed
+        # by every _pid the counts saw, so the lookup is total and costs
+        # no job of its own.
         if self.track_order:
             cnt_rows = extracted.groupBy("_pid").count().collect()
-            offs, acc = {}, 0
+            offs, acc = [], 0
             for pid, n in sorted((r["_pid"], r["count"]) for r in cnt_rows):
-                offs[pid] = acc
+                offs += [F.lit(int(pid)), F.lit(acc)]
                 acc += n
-            off_df = spark.createDataFrame(
-                [(int(p), int(o)) for p, o in offs.items()] or [(0, 0)],
-                "_pid int, _seq_off long")
+            seq_off = F.create_map(*offs)[F.col("_pid")] if offs else F.lit(0)
             w_seq = Window.partitionBy("_pid").orderBy(F.col("priority").asc())
-            extracted_seq = (
-                extracted.join(F.broadcast(off_df), "_pid", "left")
-                .withColumn("seq", (F.row_number().over(w_seq)
-                                    + F.coalesce("_seq_off", F.lit(0))
-                                    + F.lit(m.docs_emitted)).cast("int"))
-                .drop("_seq_off")
-            )
+            extracted_seq = extracted.withColumn(
+                "seq", (F.row_number().over(w_seq) + seq_off
+                        + F.lit(m.docs_emitted)).cast("int"))
         else:
             extracted_seq = extracted.withColumn("seq", F.lit(None).cast("int"))
 
@@ -990,35 +989,26 @@ class CrawlEngine:
             # per-partition metrics (readback below, no stats job)
             .withColumn("partition_id", F.spark_partition_id())
         )
-        # frontier_log and documents are INDEPENDENT jobs (log reads the
-        # materialized `fetch` cache, docs materializes the `extracted`
-        # cache) — submit them concurrently; Spark schedules both job DAGs
-        # at once, so the log write's tasks fill cores while the docs
-        # write's UDF stages ramp. The pending write stays AFTER docs:
-        # it re-reads `extracted`, whose cache the docs write populates.
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            log_f = pool.submit(self.store.write_delta, frontier_log,
-                                "frontier_log", i)
-            doc_f = pool.submit(self.store.write_delta, docs_out,
-                                "documents", i)
-            log_path = log_f.result()
-            doc_path = doc_f.result()
-
-        # --- wave-tail jobs: stats readback, pending write, sketch
-        # merge. All three are INDEPENDENT Spark jobs (the readback
-        # reads the just-written log file; pending' reads the extracted
-        # cache + the PREVIOUS sketch snapshot — the probe handle took
-        # a copy of the index, so the concurrent merge cannot affect
-        # it; the sketch merge reads the fetch cache) — run them
-        # concurrently so the tail of one job's stages back-fills cores
-        # freed by another (guide §2.6). The empty-final-wave check
-        # comes AFTER the pool: a would-be-final wave then leaves an
-        # orphan pending file + an unchanged-content sketch version,
-        # exactly the state a crash would leave (the committed manifest
-        # references neither).
-        def stats_job():
-            return (
-                spark.read.parquet(log_path)
+        # ONE write phase: the wave's writes are independent Spark jobs,
+        # submitted together so one job's tasks fill the cores another
+        # leaves idle (guide §2.6):
+        #   - frontier_log (reads the `fetch` cache), then the stats
+        #     readback of the file it wrote;
+        #   - documents and pending' both read the `extracted` cache.
+        #     _emit_docs's count collect has filled it when track_order
+        #     is on; otherwise the first reader fills each block and the
+        #     other waits on Spark's block lock. pending' probes the
+        #     PREVIOUS sketch snapshot through a copy of the index;
+        #   - the sketch merge (reads `fetch`).
+        # A failed write raises out of the pool. The manifest and the
+        # engine's sketch index (adopted after the commit) then stay at
+        # wave i-1, and a re-run of the wave overwrites the orphan files.
+        # The empty-final-wave check comes after the pool for the same
+        # reason: a would-be-final wave leaves only orphans.
+        def log_job():
+            path = self.store.write_delta(frontier_log, "frontier_log", i)
+            rows = (
+                spark.read.parquet(path)
                 .groupBy("partition_id")
                 .agg(
                     F.sum((F.col("state") == "fetched").cast("long"))
@@ -1027,6 +1017,7 @@ class CrawlEngine:
                      .alias("failed"),
                 ).collect()
             )
+            return path, rows
 
         obs = Observation(f"pending_{i}")
         pending_obs = pending_next.observe(
@@ -1040,16 +1031,21 @@ class CrawlEngine:
             path = self.store.write_pending(pending_obs, i)
             return path, int(obs.get["n"]), int(obs.get["new"] or 0)
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            stats_f = pool.submit(stats_job)
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            log_f = pool.submit(log_job)
+            doc_f = pool.submit(self.store.write_delta, docs_out,
+                                "documents", i)
             pend_f = pool.submit(pending_job)
             sk_f = (pool.submit(self._merge_seen_delta, seen_delta, i)
                     if sketch is not None else None)
-            part_rows = stats_f.result()
+            log_path, part_rows = log_f.result()
+            doc_path = doc_f.result()
             pending_path, pending_next_n, new_links_n = pend_f.result()
             # a wave before the gate references no snapshot: one left
             # from an earlier run would miss this wave's delta
-            sketch_path = sk_f.result() if sk_f is not None else None
+            sketch_index, sketch_path = (
+                sk_f.result() if sk_f is not None
+                else (self._sketch_index, None))
         ok_n = int(sum(r["fetched"] or 0 for r in part_rows))
         due_n = int(ok_n + sum(r["failed"] or 0 for r in part_rows))
         if due_n == 0:
@@ -1076,7 +1072,7 @@ class CrawlEngine:
         ] + [[i, -1, due_n, None, ok_n, due_n - ok_n, new_links_n, wall_ms]]
         met_path = self.store.write_metrics_rows(met_rows, i)
         fetched_count = due_n if cfg.seen_on_effective == SeenOn.SCHEDULE else ok_n
-        return self._commit_manifest(
+        m2 = self._commit_manifest(
             m,
             {"documents": doc_path, "frontier_log": log_path,
              "metrics": met_path},
@@ -1089,6 +1085,8 @@ class CrawlEngine:
             embed_queue_path=queue_path,
             embed_queue_count=queue_n,
         )
+        self._sketch_index = sketch_index
+        return m2
 
 
 def _sitemap_seed_rows(root_url: str, lookup: dict[str, str],

@@ -4,6 +4,8 @@ The reference loses all state on crash (in-memory HashSets — SURVEY.md
 §2.7 P8); snapshot resume is the new capability the north_rule requires.
 """
 
+import pytest
+
 from azuresearchcrawlervector_spark.config import CrawlConfig, CrawlMode
 from azuresearchcrawlervector_spark.plans.checkpoint import SnapshotStore
 from azuresearchcrawlervector_spark.plans.crawl import CrawlEngine
@@ -18,6 +20,11 @@ def _collect_state(spark, res):
     )
     seen = sorted((r["url_hash"], r["url"], r["iter"]) for r in res.seen(spark).collect())
     return docs, seen
+
+
+def _metrics(spark, res):
+    """The metrics table without its wall-clock column."""
+    return sorted(tuple(r)[:-1] for r in res.metrics(spark).collect())
 
 
 def test_kill_and_resume_bit_identical(spark, tmp_path):
@@ -90,6 +97,54 @@ def test_truncated_tmp_manifest_ignored(tmp_path):
     store.rollback_to(0)
     assert store.latest().iter == 0
     assert not list(mdir.glob("*.tmp"))
+
+
+@pytest.mark.parametrize("sketch", [False, True], ids=["no_sketch", "sketch"])
+def test_crash_in_write_phase_resumes_bit_identical(spark, tmp_path,
+                                                    monkeypatch, sketch):
+    """The documents write of wave 2 fails while the wave's other writes
+    (frontier_log, pending', sketch merge) run beside it: no manifest
+    past wave 1 is committed, the engine's sketch index stays at wave 1,
+    and resuming on the same engine equals an uninterrupted crawl."""
+    import threading
+    from dataclasses import replace
+
+    g = website1_graph()
+    cfg = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD)
+    if sketch:
+        cfg = replace(cfg, seen_sketch_min_pages=0)
+    pages = pages_df(spark, g)
+    full = CrawlEngine(spark, pages, cfg, str(tmp_path / "full"),
+                       validate_images=False).run()
+
+    real_write = SnapshotStore.write_delta
+    log_started, crashes = threading.Event(), []
+
+    def flaky_write(self, df, table, iteration):
+        if iteration == 2 and table == "frontier_log":
+            log_started.set()
+        if iteration == 2 and table == "documents" and not crashes:
+            crashes.append(table)
+            assert log_started.wait(timeout=60)
+            raise RuntimeError("injected documents write failure")
+        return real_write(self, df, table, iteration)
+
+    monkeypatch.setattr(SnapshotStore, "write_delta", flaky_write)
+    eng = CrawlEngine(spark, pages, cfg, str(tmp_path / "crash"),
+                      validate_images=False)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run()
+    m = eng.store.latest()
+    assert m.iter == 1 and not m.finished
+    if sketch:
+        assert eng._sketch_index == eng.store.read_sketch_index(
+            m.seen_sketch_path)
+
+    resumed = eng.run(resume=True)
+    assert crashes == ["documents"]
+    assert _collect_state(spark, resumed) == _collect_state(spark, full)
+    assert _metrics(spark, resumed) == _metrics(spark, full)
+    assert resumed.manifest.iter == full.manifest.iter
 
 
 def test_incremental_seen_sketch_exact_and_resumable(spark, tmp_path):

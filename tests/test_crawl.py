@@ -193,3 +193,24 @@ def test_range_partitioned_topk_cap(spark, tmp_ckpt):
     base = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD, max_pages=7)
     cfg = replace(base, topk_range_threshold=0)
     assert_engine_matches_sim(spark, g, cfg, tmp_ckpt)
+
+
+def test_visit_order_across_range_partitions(spark, tmp_ckpt):
+    # a wave with more than ROWS_PER_UDF_TASK pending rows is range-
+    # partitioned by priority into several partitions, so its visit-
+    # order seq adds a per-partition offset for more than one _pid
+    from collections import Counter
+
+    from azuresearchcrawlervector_spark.plans.crawl import ROWS_PER_UDF_TASK
+    from azuresearchcrawlervector_spark.sources.fixtures import hot_host_graph
+    assert spark.sparkContext.defaultParallelism >= 2
+    # one host, a 25-ary tree of 700 pages: waves of 1, 25, 625, 49
+    g = hot_host_graph(n_hosts=1, n_urls=700, hot_share=1.0, fanout=25)
+    cfg = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD,
+                      max_pages=1000, politeness=False)
+    res, sim = assert_engine_matches_sim(spark, g, cfg, tmp_ckpt)
+    per_wave = Counter(r["iter"] for r in res.frontier_log(spark).collect())
+    assert max(per_wave.values()) > ROWS_PER_UDF_TASK
+    got = [(r["seq"], r["url"]) for r in
+           res.documents(spark).orderBy("seq").collect()]
+    assert got == [(d["seq"], d["url"]) for d in sim.documents]
