@@ -8,9 +8,9 @@ Scope (all REAL):
   8-bit BI_RLE8 via the same exact/median-cut palettes as the GIF
   encoder (lossless when ≤256 distinct colors).
 
-Last of the classic still-image formats the repo carries from scratch
-(PNG, JPEG, GIF, TIFF, BMP); like the others it is part of the
-beyond-reference multimodal family.
+One of the still-image formats the repo carries from scratch (PNG,
+JPEG, GIF, BMP); like GIF it is part of the beyond-reference
+multimodal family.
 """
 from __future__ import annotations
 

@@ -15,6 +15,10 @@ The container has no PIL/libjpeg, so:
   production deployment swaps core/jpeg.py for libjpeg-turbo with no
   Spark-side changes (functions/imagefn.py is codec-agnostic).
 
+encode/decode also accept ``gif`` (core/gif.py) and ``bmp``
+(core/bmp.py), which no crawl path produces. Any other ``fmt`` raises
+ValueError, which the image-validation UDF records as img_ok=false.
+
 Also here: PSNR and an 8x8 average perceptual hash (phash) used for the
 per-row fetch invariant, and the deterministic pixel generator that
 synthesizes image content from image_id (seed-stable, FIXTURES.md §1).
@@ -138,9 +142,6 @@ def encode(pixels: np.ndarray, fmt: str) -> bytes:
         # lossless when <=256 distinct colors, else deterministic
         # median-cut quantization — lossy, PSNR-gated like jpeg
         return gif_encode(pixels)
-    if fmt == "tiff":
-        from .tiff import tiff_encode
-        return tiff_encode(pixels)  # lossless (LZW)
     if fmt == "bmp":
         from .bmp import bmp_encode
         return bmp_encode(pixels)   # lossless (24-bit BI_RGB)
@@ -163,9 +164,6 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "gif":
         from .gif import gif_decode
         return gif_decode(data)
-    if fmt == "tiff":
-        from .tiff import tiff_decode
-        return tiff_decode(data)
     if fmt == "bmp":
         from .bmp import bmp_decode
         return bmp_decode(data)
@@ -180,13 +178,10 @@ def sniff_image(data: bytes) -> dict:
     marker segments for JPEG) vs a full entropy decode, so corrupt or
     mislabeled rows are dropped before the expensive stage.
 
-    Recognizes every format the repo can decode — PNG (IHDR), baseline
-    JPEG (marker walk to SOF0/1/2), GIF87a/89a, TIFF (IFD walk, both
-    byte orders), BMP (DIB header), QPNG (sniffs the inner PNG) — plus
-    WebP at the METADATA tier only (VP8/VP8L/VP8X dims from the RIFF
-    header; the repo carries no VP8 decoder, so fmt='webp' is not
-    accepted by decode()). Raises ValueError on anything else or on
-    truncated headers.
+    Recognizes the formats decode() accepts — PNG (IHDR), baseline
+    JPEG (marker walk to SOF0/1/2), GIF87a/89a, BMP (DIB header) and
+    QPNG (sniffs the inner PNG). Raises ValueError on anything else
+    (TIFF, WebP, …) or on truncated headers.
     """
     data = bytes(data)
     if data[:4] == b"QPNG":
@@ -207,41 +202,12 @@ def sniff_image(data: bytes) -> dict:
         w, h = struct.unpack("<HH", data[6:10])
         return {"fmt": "gif", "w": w, "h": h, "bit_depth": 8,
                 "channels": 3}
-    if data[:4] in (b"II*\x00", b"MM\x00*"):
-        from .tiff import tiff_parse
-        m = tiff_parse(data)   # IFD walk only — no strip data touched
-        return {"fmt": "tiff", "w": m["w"], "h": m["h"],
-                "bit_depth": m["bits_per_sample"],
-                "channels": m["channels"]}
     if data[:2] == b"BM" and len(data) >= 54:
         from .bmp import bmp_parse
         m = bmp_parse(data)
         return {"fmt": "bmp", "w": m["w"], "h": m["h"],
                 "bit_depth": min(m["bpp"], 8),
                 "channels": 3 if m["bpp"] == 24 else 1}
-    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
-        # header-only WebP dims (metadata tier — no VP8 decoder here):
-        # VP8X canvas, VP8L signature-packed, VP8 lossy frame header
-        chunk = data[12:16]
-        if chunk == b"VP8X" and len(data) >= 30:
-            w = int.from_bytes(data[24:27], "little") + 1
-            h = int.from_bytes(data[27:30], "little") + 1
-            return {"fmt": "webp", "w": w, "h": h, "bit_depth": 8,
-                    "channels": 4 if data[20] & 0x10 else 3}
-        if chunk == b"VP8L" and len(data) >= 25 and data[20] == 0x2F:
-            bits = int.from_bytes(data[21:25], "little")
-            w = (bits & 0x3FFF) + 1
-            h = ((bits >> 14) & 0x3FFF) + 1
-            return {"fmt": "webp", "w": w, "h": h, "bit_depth": 8,
-                    "channels": 4 if (bits >> 28) & 1 else 3}
-        if chunk == b"VP8 " and len(data) >= 30:
-            if data[23:26] != b"\x9d\x01\x2a":
-                raise ValueError("webp: bad VP8 start code")
-            w = int.from_bytes(data[26:28], "little") & 0x3FFF
-            h = int.from_bytes(data[28:30], "little") & 0x3FFF
-            return {"fmt": "webp", "w": w, "h": h, "bit_depth": 8,
-                    "channels": 3}
-        raise ValueError("webp: unrecognized or truncated chunk")
     if data[:2] == b"\xff\xd8":
         # walk marker segments to the frame header (SOF0/1/2); spec
         # allows 0xFF fill bytes between segments and length-less

@@ -24,15 +24,18 @@ bit-identical by construction:
   python list read per symbol (~1 us/symbol; see _decode_scan_lut).
 - batched lanes (jpeg_decode_batch without the C kernel): one
   vectorized step advances every image by one symbol — ~2.3-2.8x
-  scalar at 16x16, 1-2x at 64x48; >100-MCU images route back to the
-  scalar path. The remaining production step-up for a JPEG-heavy
-  corpus is swapping in libjpeg-turbo, with no Spark-side changes
-  (functions/imagefn.py is codec-agnostic). What the engine ARCHITECTURE
-  guarantees — pinned by the N vs 4N scaling bench, which runs with
-  full decode+PSNR validation on — is that decode is embarrassingly
-  parallel row work that overlaps the rest of the wave and scales
-  with cores (round-4: 0.921 efficiency at 2M URLs WITH decode
-  dominating row cost).
+  scalar at 16x16; on 400 crawl-size 64x48 q97 images ~1.3 vs ~2.5
+  ms/img, about 2x the scalar LUT (4-core x86 VM, C kernel disabled),
+  which is why it stays as the decoder of hosts with no C compiler.
+  >100-MCU images route back to the scalar path, and the per-bit
+  engine stays as the tests' reference. The remaining production
+  step-up for a JPEG-heavy corpus is swapping in libjpeg-turbo, with
+  no Spark-side changes (functions/imagefn.py is codec-agnostic).
+  What the engine ARCHITECTURE guarantees — pinned by the N vs 4N
+  scaling bench, which runs with full decode+PSNR validation on — is
+  that decode is embarrassingly parallel row work that overlaps the
+  rest of the wave and scales with cores (round-4: 0.921 efficiency at
+  2M URLs WITH decode dominating row cost).
 
 Bit-exactness contract (tests/test_images.py): decode(encode(px)) ==
 reconstruct(px), where reconstruct() replicates the encoder's model

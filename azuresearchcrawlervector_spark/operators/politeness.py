@@ -73,50 +73,6 @@ def apply_robots_disallow(df: DataFrame, robots: DataFrame | None,
     return joined.filter(~blocked).drop("disallow")
 
 
-def rate_limit_budget(df: DataFrame, max_per_window: int,
-                      priority_col: str = "priority",
-                      to_unpersist: list | None = None) -> DataFrame:
-    """P3: the reference's GLOBAL RateLimiter (≥4 s between embedding
-    calls, RateLimiter.cs:17-35) as a budget operator — keep the
-    max_per_window lowest-priority rows per window, tag the rest as
-    carry-over.
-
-    Core-scalable global rank (no single-partition Window): range-
-    partition by priority (equal keys co-located, partitions ordered,
-    assignment frozen in a cache), one tiny per-partition count action,
-    then global_rank = earlier partitions' sizes + rank within the
-    partition. The engine's wired P3 path (embed_budget_per_wave) uses
-    the sibling exact top-K; this operator form additionally tags EVERY
-    row. Caller may pass ``to_unpersist`` to release the internal cache
-    once the result is consumed."""
-    spark = df.sparkSession
-    P = spark.sparkContext.defaultParallelism
-    rp = df.repartitionByRange(P, F.col(priority_col).asc()).persist()
-    if to_unpersist is not None:
-        to_unpersist.append(rp)
-    cnts = sorted(
-        (r["pid"], r["count"]) for r in
-        rp.groupBy(F.spark_partition_id().alias("pid")).count().collect())
-    offs, acc = {}, 0
-    for pid, n in cnts:
-        offs[pid] = acc
-        acc += n
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offs.items()] or [(0, 0)],
-        "pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy(F.col(priority_col).asc())
-    return (
-        rp.withColumn("_pid", F.spark_partition_id())
-        .join(F.broadcast(off_df), F.col("_pid") == F.col("pid"), "left")
-        .drop("pid")
-        .withColumn("global_rank",
-                    (F.row_number().over(w)
-                     + F.coalesce("_off", F.lit(0))).cast("int"))
-        .withColumn("due", F.col("global_rank") <= max_per_window)
-        .drop("_pid", "_off")
-    )
-
-
 def salted_repartition(df: DataFrame, salt_partitions: int, n_partitions: int | None = None) -> DataFrame:
     """P2: spread a hot host over ``salt_partitions`` tasks while keeping
     host locality for cold hosts: partition by (host, pmod(url_hash, S))."""

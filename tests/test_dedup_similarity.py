@@ -304,6 +304,26 @@ def test_frame_sample_stub(spark):
     assert [r["frame_idx"] for r in rows] == [0, 1, 2]
 
 
+def test_hamming_pairs_over_image_phash(spark):
+    # the input_hint catalog carries phash:int64 — near-dup images are
+    # exactly hamming_pairs over that column (no text involved)
+    from azuresearchcrawlervector_spark.core.images import (
+        generate_pixels, phash64)
+    from azuresearchcrawlervector_spark.operators.dedup import hamming_pairs
+
+    base = generate_pixels("ph-a", 64, 48)
+    tweak = base.copy()
+    tweak[0, 0] = (tweak[0, 0].astype(np.int32) ^ 3).astype(np.uint8)
+    other = generate_pixels("ph-b", 64, 48)
+    rows = [(1, phash64(base)), (2, phash64(tweak)), (3, phash64(other))]
+    df = spark.createDataFrame(rows, "image_id long, phash long")
+    got = hamming_pairs(df, "phash", id_col="image_id",
+                        max_hamming=2).collect()
+    pairs = {(r["id_a"], r["id_b"]) for r in got}
+    assert (1, 2) in pairs          # one-pixel tweak: near-identical
+    assert (1, 3) not in pairs and (2, 3) not in pairs
+
+
 def test_ivf_topk(spark, embs):
     from azuresearchcrawlervector_spark.operators.similarity import ivf_topk
     q = embs.filter("vec_id = 0").collect()[0]["embedding"]

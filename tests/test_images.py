@@ -1,6 +1,8 @@
 """Image codec + per-row fetch invariant (BASELINE.json input_hint:
 decoded-pixel allclose / PSNR ≥ 40 dB lossy, caption equality)."""
 
+import struct
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -65,12 +67,24 @@ def test_decode_validate_udf(spark):
 
 
 def test_corrupt_bytes_flagged_not_crashing(spark):
+    # img-tiff is a well-formed uncompressed 1x1 baseline TIFF whose one
+    # pixel is exactly generate_pixels("img-tiff", 1, 1): tiff is not a
+    # payload format, so it is flagged without a decode, like garbage
+    ifd = [(256, 4, 1, 1), (257, 4, 1, 1), (258, 3, 3, 12), (259, 3, 1, 1),
+           (262, 3, 1, 2), (273, 4, 1, 8), (277, 3, 1, 3), (278, 4, 1, 64),
+           (279, 4, 1, 3)]
+    tiff = (b"II*\x00" + struct.pack("<I", 18) + b"\xb9\xbe\xb8\x00"
+            + struct.pack("<3HH", 8, 8, 8, len(ifd))
+            + b"".join(struct.pack("<HHII", *e) for e in ifd) + bytes(4))
     df = spark.createDataFrame(
-        [("img-bad", bytearray(b"garbage"), "png")],
+        [("img-bad", bytearray(b"garbage"), "png"),
+         ("img-tiff", bytearray(tiff), "tiff")],
         "image_id string, bytes binary, fmt string",
     )
-    row = with_image_validation(df).collect()[0]
-    assert row["img_ok"] is False
+    rows = {r["image_id"]: r for r in with_image_validation(df).collect()}
+    for iid in ("img-bad", "img-tiff"):
+        assert rows[iid]["img_ok"] is False
+        assert rows[iid]["psnr_db"] is None
 
 
 # ------------------------------------------------------------ real JPEG

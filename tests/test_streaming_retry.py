@@ -1,5 +1,5 @@
-"""Structured Streaming page processing, P3 rate limiter, P4 retry,
-S2 sites-file multi-crawl."""
+"""Structured Streaming page processing, P4 retry, S2 sites-file
+multi-crawl."""
 
 import datetime
 import hashlib
@@ -8,7 +8,6 @@ import json
 from pyspark.sql import functions as F
 
 from azuresearchcrawlervector_spark.config import CrawlConfig, CrawlMode, parse_sites_json
-from azuresearchcrawlervector_spark.operators.politeness import rate_limit_budget
 from azuresearchcrawlervector_spark.plans.crawl import CrawlEngine, run_sites
 from azuresearchcrawlervector_spark.sources.fixtures import (
     broken_links_site,
@@ -42,15 +41,6 @@ def test_streaming_pipeline_availablenow(spark, tmp_path):
         assert r["id"] == hashlib.sha512(r["url"].encode()).hexdigest()
         assert len(r["title_vector"]) == 128
         assert r["title"]
-
-
-def test_rate_limit_budget(spark):
-    df = spark.createDataFrame([(f"u{i}", f"{i:04d}") for i in range(20)],
-                               "url string, priority string")
-    out = rate_limit_budget(df, max_per_window=5)
-    due = sorted(r["priority"] for r in out.filter("due").collect())
-    assert due == [f"{i:04d}" for i in range(5)]  # earliest 5 pass
-    assert out.filter("not due").count() == 15
 
 
 def test_retry_policy(spark, tmp_ckpt):
