@@ -1,7 +1,12 @@
 """HTML extraction UDF: one Arrow-batched pass per page producing
 title + cleaned text + the ordered link list (T1/T2 + F5/F6 semantics,
 TextExtractor.cs:19-72 / AbotCrawler.cs:68-88). Parsing happens ONCE per
-page; downstream link handling is pure built-ins (explode/filter).
+page, and the same pass resolves each link against the page URL (J4,
+``core.urls.canonicalize``/``host_of``): a link carries its raw ``href``
+plus its canonical ``url`` and ``host``, both NULL where the F1 shape
+filter (``href_is_crawlable``) rejects the href. Downstream link handling
+is pure built-ins (explode/filter) — the crawl crosses the Python UDF
+boundary once per page, not once more per link.
 """
 
 from __future__ import annotations
@@ -19,12 +24,15 @@ from pyspark.sql.types import (
 )
 
 from ..core.htmlkit import extract_body_html, extract_page
+from ..core.urls import canonicalize, host_of, href_is_crawlable
 
 LINK_TYPE = StructType(
     [
         StructField("href", StringType()),
         StructField("link_pos", IntegerType()),
         StructField("in_selector", BooleanType()),
+        StructField("url", StringType()),
+        StructField("host", StringType()),
     ]
 )
 
@@ -37,20 +45,32 @@ EXTRACT_TYPE = StructType(
 )
 
 
+def _link(page_url: str | None, href: str, pos: int, in_sel: bool) -> dict:
+    url = canonicalize(page_url, href) if href_is_crawlable(href) else None
+    return {"href": href, "link_pos": pos, "in_selector": in_sel,
+            "url": url, "host": host_of(url)}
+
+
 @F.pandas_udf(EXTRACT_TYPE)
-def extract_page_udf(html: pd.Series, selector: pd.Series) -> pd.DataFrame:
+def extract_page_udf(html: pd.Series, selector: pd.Series,
+                     page_url: pd.Series) -> pd.DataFrame:
     titles, contents, links = [], [], []
-    for doc, sel in zip(html, selector):
+    for doc, sel, base in zip(html, selector, page_url):
         t, c, ls = extract_page(doc, sel if isinstance(sel, str) and sel else None)
+        base = base if isinstance(base, str) else None
         titles.append(t)
         contents.append(c)
-        links.append([{"href": h, "link_pos": p, "in_selector": s} for h, p, s in ls])
+        links.append([_link(base, h, p, s) for h, p, s in ls])
     return pd.DataFrame({"title": titles, "content": contents, "links": links})
 
 
 def with_extraction(df, html_col: str = "html", selector: str | None = None):
-    """df + (title, content, links) columns from one parse pass."""
-    ext = extract_page_udf(F.col(html_col), F.lit(selector))
+    """df + (title, content, links) columns from one parse pass. Links
+    resolve against the frame's ``url`` column when it has one; without
+    it only absolute hrefs get a ``url``."""
+    page_url = (F.col("url") if "url" in df.columns
+                else F.lit(None).cast("string"))
+    ext = extract_page_udf(F.col(html_col), F.lit(selector), page_url)
     return (
         df.withColumn("_ext", ext)
         .withColumn("title", F.col("_ext.title"))

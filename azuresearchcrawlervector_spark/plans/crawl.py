@@ -13,11 +13,13 @@ Wave dataflow (SURVEY.md §3.1 "Spark equivalent lifecycle"):
           ─ global maxPages cap (TakeOrderedAndProject on priority — A1)
           ─ salted repartition (P2, hot-host skew)
           ─ fetch-join against the pages table (J5; status filter F3)
-          ─ extraction UDF (T1/T2, one parse per page; selector F5/F6)
-          ─ image join + decode/validate UDF (PSNR + caption invariant)
+          ─ extraction UDF (T1/T2, one parse per page; selector F5/F6;
+            links leave it canonical — J4)
+          ─ image probe + decode/validate UDF (PSNR + caption invariant),
+            off the fetch rows, beside the extraction
           ─ documents append (id = sha2(url,512) — T5)
-          ─ link explode → F1 filter → canonicalize UDF → same-host F2
-            → depth gate A2 → anti-join seen (Bloom + exact, J1-J3)
+          ─ link explode → F1 filter → same-host F2 → depth gate A2
+            → anti-join seen (Bloom + exact, J1-J3)
           ─ commit snapshot (pending' / seen Δ / documents Δ / metrics Δ)
 
 Traversal policies as priority keys (O1-O3):
@@ -38,7 +40,7 @@ pending, so no per-wave re-dedup of the whole frontier is needed.
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -50,9 +52,7 @@ from ..core.xxh import url_hash
 from ..functions.embeddings import make_dual_embed_udf
 from ..functions.html import with_extraction
 from ..functions.imagefn import with_image_validation
-from ..functions.urls import (
-    canonicalize_udf, doc_id_col, host_udf, href_is_crawlable_col, url_hash_col,
-)
+from ..functions.urls import doc_id_col, href_is_crawlable_col, url_hash_col
 from ..operators.politeness import apply_politeness, salted_repartition
 from ..operators.seen import (
     BloomFilter, ShardedSketchFiles, anti_join_seen, merge_delta_sharded_files,
@@ -63,9 +63,11 @@ from .checkpoint import PENDING_SCHEMA, Manifest, SnapshotStore
 SEEN_SCHEMA = "url_hash long, url string, iter int"
 
 # P3 embed budget: the columns a fetched-but-deferred document needs to
-# be embedded/validated/emitted in a later wave
+# be embedded and emitted in a later wave (its image checks ride along,
+# so draining only embeds)
 EMBED_QUEUE_COLS = ("url", "url_hash", "seq", "depth", "priority",
-                    "title", "content", "image_id")
+                    "title", "content", "image_id",
+                    "img_ok", "psnr_db", "caption_ok")
 
 
 METRICS_SCHEMA = ("iter int, partition_id int, urls_in long, deduped long, "
@@ -262,9 +264,11 @@ class CrawlEngine:
         self.dry_run = dry_run
         # U1 extension point: the reference's virtual TextExtractor
         # (TextExtractor.cs:19) — pass a custom (df, html_col, selector)
-        # -> df+title/content/links function to swap extraction
+        # -> df+title/content/links function to swap extraction. Links
+        # must carry the canonical url/host (functions/html.LINK_TYPE);
+        # wrapping with_extraction gives them
         self.extractor = extractor or with_extraction
-        self._embed = make_dual_embed_udf(cfg.embedding_dim)
+        self._embed_udf = make_dual_embed_udf(cfg.embedding_dim)
         # S11 leveled console (driver-side; executors report via the
         # metrics table). Quiet INFORMATION-level by default.
         from ..core.console import Console
@@ -444,104 +448,134 @@ class CrawlEngine:
         return out
 
     # ------------------------------------------------------------- documents
-    def _embed_and_validate(self, emit_rows: DataFrame, keys_src: DataFrame,
-                            small_wave: bool, pending_n: int,
-                            broadcasts: list | None = None) -> DataFrame:
-        """Embed + image-validate the rows being emitted this wave:
-        id = sha2(url,512) (T5), truncation-before-embed (T4), dual
-        pseudo-embeddings (S10), per-row image PSNR/caption invariant
-        (input_hint). ``keys_src`` supplies the image_id key set for the
-        images-table probe (bucket pruning + broadcast/sketch filter)."""
+    def _check_images(self, w: _Wave, rows: DataFrame, n: int) -> DataFrame:
+        """Image validation of the image_ids of ``rows`` (at most ``n``
+        rows): the per-row PSNR/caption invariant (input_hint). Probes
+        the big images table with the key set (the bytes column never
+        crosses a shuffle) — bucket pruning, then a broadcast key join
+        on small sets or an executor-side sketch filter on big ones —
+        and runs the decode/PSNR UDF on the matched sliver. Returns the
+        COMPACT (image_id, img_ok, psnr_db, caption_ok) rows, persisted
+        and materialised; the wave releases the cache."""
         cfg = self.cfg
-        docs = (
-            emit_rows
+        images_src = self.images
+        if (self._images_bucketed
+                and n < BUCKET_PRUNE_ROWS_PER_BUCKET * cfg.payload_buckets):
+            from ..sources.payload import prune_by_buckets, wave_bucket_ids
+            img_buckets = wave_bucket_ids(
+                rows.where(F.col("image_id").isNotNull()),
+                F.xxhash64("image_id"), cfg.payload_buckets)
+            images_src = prune_by_buckets(images_src, img_buckets)
+        if n <= cfg.broadcast_wave_threshold:
+            img_keys = rows.select("image_id").where(
+                F.col("image_id").isNotNull()).distinct()
+            # at most one decode task per core: the matched sliver is
+            # small, and each images-scan split would otherwise be its
+            # own Python task (a second round of worker start-up once
+            # the splits outnumber the cores)
+            img_matched = images_src.join(
+                F.broadcast(img_keys), on="image_id", how="inner",
+            ).coalesce(self.spark.sparkContext.defaultParallelism)
+        else:
+            img_sketch = merged_sketch(
+                rows.select(F.xxhash64("image_id").alias("ih")), "ih",
+                BloomFilter.sized_for(max(n, 1024),
+                                      cfg.bloom_bits_per_key).n_bits,
+            )
+            img_matched = split_by_sketch(
+                images_src.withColumn("ih", F.xxhash64("image_id")),
+                img_sketch, "ih", broadcasts=w.broadcasts,
+            ).filter(F.col("maybe_seen")).drop("maybe_seen", "ih")
+        checked = with_image_validation(img_matched).withColumn(
+            "caption_ok",
+            F.col("caption") == F.concat(
+                F.lit("synthetic caption for "), F.col("image_id")),
+        ).select("image_id", "img_ok", "psnr_db", "caption_ok").persist()
+        w.unpersist.append(checked)
+        checked.count()
+        return checked
+
+    @staticmethod
+    def _with_image_checks(rows: DataFrame, checked: DataFrame | None,
+                           small: bool) -> DataFrame:
+        """``rows`` + (img_ok, psnr_db, caption_ok): joined from the
+        compact image checks, NULL when images are not validated."""
+        if checked is None:
+            return (rows.withColumn("img_ok", F.lit(None).cast("boolean"))
+                        .withColumn("psnr_db", F.lit(None).cast("double"))
+                        .withColumn("caption_ok", F.lit(None).cast("boolean")))
+        return rows.join(F.broadcast(checked) if small else checked,
+                         on="image_id", how="left")
+
+    def _embed(self, rows: DataFrame) -> DataFrame:
+        """The documents of the rows emitted this wave: id = sha2(url,512)
+        (T5), truncation-before-embed (T4), dual pseudo-embeddings (S10);
+        the rows already carry their image checks."""
+        return (
+            rows
             .withColumn("id", doc_id_col("url"))
-            .withColumn("_vecs", self._embed(
+            .withColumn("_vecs", self._embed_udf(
                 F.substring("title", 1, 8000), F.substring("content", 1, 8000)))
             .withColumn("title_vector", F.col("_vecs.title_vector"))
             .withColumn("content_vector", F.col("_vecs.content_vector"))
-            .drop("_vecs")
+            .select(
+                "id", "url", "seq", "depth", "title", "content",
+                "title_vector", "content_vector", "image_id",
+                "img_ok", "psnr_db", "caption_ok",
+            )
         )
-        if self.validate_images:
-            # probe the big images table with THIS wave's image_ids (the
-            # bytes column never crosses a shuffle): small waves broadcast
-            # the key set; big waves sketch-filter the scan (executor-side,
-            # no driver broadcast build). The decode/PSNR UDF runs on the
-            # matched sliver; the COMPACT validation rows then join back.
-            images_src = self.images
-            if (self._images_bucketed and pending_n
-                    < BUCKET_PRUNE_ROWS_PER_BUCKET * cfg.payload_buckets):
-                from ..sources.payload import (
-                    prune_by_buckets, wave_bucket_ids,
-                )
-                img_buckets = wave_bucket_ids(
-                    keys_src.where(F.col("image_id").isNotNull()),
-                    F.xxhash64("image_id"), cfg.payload_buckets)
-                images_src = prune_by_buckets(images_src, img_buckets)
-            if small_wave:
-                img_keys = keys_src.select("image_id").where(
-                    F.col("image_id").isNotNull()).distinct()
-                # at most one decode task per core: the matched sliver
-                # is small, and each images-scan split would otherwise
-                # be its own Python task (a second round of worker
-                # start-up once the splits outnumber the cores)
-                img_matched = images_src.join(
-                    F.broadcast(img_keys), on="image_id", how="inner",
-                ).coalesce(self.spark.sparkContext.defaultParallelism)
-            else:
-                img_sketch = merged_sketch(
-                    keys_src.select(F.xxhash64("image_id").alias("ih")), "ih",
-                    BloomFilter.sized_for(max(pending_n, 1024),
-                                          cfg.bloom_bits_per_key).n_bits,
-                )
-                img_matched = split_by_sketch(
-                    images_src.withColumn("ih", F.xxhash64("image_id")),
-                    img_sketch, "ih", broadcasts=broadcasts,
-                ).filter(F.col("maybe_seen")).drop("maybe_seen", "ih")
-            img_checked = with_image_validation(img_matched).withColumn(
-                "caption_ok",
-                F.col("caption") == F.concat(
-                    F.lit("synthetic caption for "), F.col("image_id")),
-            ).select("image_id", "img_ok", "psnr_db", "caption_ok")
-            if small_wave:
-                docs = docs.join(F.broadcast(img_checked), on="image_id", how="left")
-            else:
-                docs = docs.join(img_checked, on="image_id", how="left")
-        else:
-            docs = (docs.withColumn("img_ok", F.lit(None).cast("boolean"))
-                        .withColumn("psnr_db", F.lit(None).cast("double"))
-                        .withColumn("caption_ok", F.lit(None).cast("boolean")))
-        return docs.select(
-            "id", "url", "seq", "depth", "title", "content",
-            "title_vector", "content_vector", "image_id",
-            "img_ok", "psnr_db", "caption_ok",
-        )
+
+    def _read_embed_queue(self, w: _Wave, m: Manifest) -> DataFrame:
+        """The P3 embed queue of ``m``. A queue written by an older build
+        carries no image checks; its rows are checked here, through the
+        same helper a fetch wave uses."""
+        backlog = self.spark.read.parquet(m.embed_queue_path)
+        if "img_ok" in backlog.columns:
+            return backlog
+        n = max(m.embed_queue_count, 1)
+        checked = (self._check_images(w, backlog, n)
+                   if self.validate_images else None)
+        return self._with_image_checks(
+            backlog, checked, n <= self.cfg.broadcast_wave_threshold,
+        ).select(*EMBED_QUEUE_COLS)
+
+    def _write_docs(self, w: _Wave, docs: DataFrame,
+                    carry: DataFrame | None) -> tuple[str, str | None, int]:
+        """Write the wave's documents, then the P3 embed-queue rewrite
+        when ``carry`` is given (full rewrite, like pending; its count
+        rides the write). Returns (doc_path, queue_path, queue_n)."""
+        doc_path = self.store.write_delta(docs, "documents", w.i)
+        if carry is None:
+            return doc_path, w.m.embed_queue_path, w.m.embed_queue_count
+        obs = Observation(f"equeue_{w.i}")
+        queue_path = self.store.write_delta(
+            carry.observe(obs, F.count(F.lit(1)).alias("n")),
+            "embed_queue", w.i)
+        return doc_path, queue_path, int(obs.get["n"])
 
     def _drain_wave(self, m: Manifest) -> Manifest:
         """P3 drain: fetching is finished but deferred documents remain
         in the embed queue — emit up to the per-wave budget (by
-        priority) until the queue empties. Same commit protocol as a
-        fetch wave: data files first, manifest last; a crash re-runs the
-        drain deterministically."""
+        priority) until the queue empties. The queued rows carry their
+        image checks, so a drain wave only embeds. Same commit protocol
+        as a fetch wave: data files first, manifest last; a crash re-runs
+        the drain deterministically."""
         cfg, budget = self.cfg, self.cfg.embed_budget_per_wave
         w = _Wave(m, i=m.iter + 1, t0=time.monotonic(),
                   small=budget <= cfg.broadcast_wave_threshold)
-        backlog = self.spark.read.parquet(m.embed_queue_path)
-        if budget > cfg.topk_range_threshold:
-            due = self._exact_topk_by_priority(backlog, budget, w.unpersist)
-        else:
-            due = backlog.orderBy("priority").limit(budget)
-        due = due.persist()
-        w.unpersist.append(due)
-        carry = backlog.join(due.select("url_hash"), "url_hash", "left_anti")
-        docs_out = self._embed_and_validate(
-            due, due, w.small, max(m.embed_queue_count, 1),
-            broadcasts=w.broadcasts)
-        doc_path = self.store.write_delta(docs_out, "documents", w.i)
-        obs = Observation(f"equeue_{w.i}")
-        carry_obs = carry.observe(obs, F.count(F.lit(1)).alias("n"))
-        queue_path = self.store.write_delta(carry_obs, "embed_queue", w.i)
-        queue_n = int(obs.get["n"])
+        try:
+            backlog = self._read_embed_queue(w, m)
+            if budget > cfg.topk_range_threshold:
+                due = self._exact_topk_by_priority(backlog, budget, w.unpersist)
+            else:
+                due = backlog.orderBy("priority").limit(budget)
+            due = due.persist()
+            w.unpersist.append(due)
+            carry = backlog.join(due.select("url_hash"), "url_hash", "left_anti")
+            doc_path, queue_path, queue_n = self._write_docs(
+                w, self._embed(due), carry)
+        finally:
+            w.release()
         wall_ms = (time.monotonic() - w.t0) * 1000.0
         met_rows = [[w.i, -1, 0, None, 0, 0, None, wall_ms]]
         met_path = self.store.write_metrics_rows(met_rows, w.i)
@@ -551,7 +585,6 @@ class CrawlEngine:
             embed_queue_path=queue_path, embed_queue_count=queue_n)
         self.console.write_debug_line(
             f"drain wave {w.i}: queue'={queue_n} wall_ms={wall_ms:.0f}")
-        w.release()
         return m2
 
     def _finish(self, m: Manifest) -> Manifest:
@@ -584,13 +617,23 @@ class CrawlEngine:
 
     # ------------------------------------------------------------------ wave
     def _wave(self, m: Manifest) -> Manifest:
-        """One frontier wave as named stages. The stages before _commit
-        build plans (plus the tiny driver collects that top-K, bucket
-        pruning, wave sketches and visit order need); _commit runs ONE
-        concurrent write phase — (frontier_log → stats readback) ∥
-        documents ∥ pending' ∥ sketch merge — then the manifest.
-        Metrics ride in the manifest commit. The wave's caches and
-        broadcasts are released even when a write fails."""
+        """One frontier wave as named stages, scheduled by dependency:
+        every Spark job is submitted to the wave's pool as soon as the
+        plan it reads exists, not after all plans are built.
+
+          schedule → fetch ─┬─ image checks (pool; off the fetch-ok rows)
+                            └─ extract ─┬─ docs branch (pool; joins the
+                                        │  image checks, writes documents)
+                                        └─ discover_links → dedup → commit
+                                           (pool: frontier_log ∥ pending'
+                                           ∥ sketch merge; then manifest)
+
+        While the docs branch runs, the driver thread builds the links,
+        dedup and frontier_log plans (py4j plan building is a large part
+        of a small wave's fixed cost). Dry runs check no images: they
+        emit no documents. Metrics ride in the manifest commit. A raised
+        job leaves the manifest and sketch index at wave i-1; the wave's
+        caches and broadcasts are released once every job has ended."""
         if m.pages_fetched >= self.cfg.max_pages or m.pending_count == 0:
             return self._finish(m)
         w = _Wave(m, i=m.iter + 1, t0=time.monotonic(),
@@ -608,16 +651,22 @@ class CrawlEngine:
             due, budget_due, budget_carry, capped = stage(
                 "schedule", self._schedule, pending)
             fetch = stage("fetch", self._fetch, pending, due)
-            ok, extracted = stage("extract", self._extract, fetch)
-            docs_out, carry_docs = stage(
-                "emit_docs", self._emit_docs, extracted)
-            children = stage(
-                "discover_links", self._discover_links, extracted)
-            pending_next, seen_delta, sketch = stage(
-                "dedup", self._dedup, children, fetch, ok,
-                budget_due, budget_carry, capped)
-            m2 = stage("commit", self._commit, fetch, docs_out, carry_docs,
-                       pending_next, seen_delta, sketch)
+            with ThreadPoolExecutor(max_workers=5) as pool:
+                images_f = None
+                if self.validate_images and not self.dry_run:
+                    # extracted = exactly the fetch-ok rows: same key set
+                    images_f = pool.submit(
+                        self._check_images, w,
+                        fetch.filter(F.col("fetch_ok")), m.pending_count)
+                extracted = stage("extract", self._extract, fetch)
+                docs_f = pool.submit(self._emit_docs, w, extracted, images_f)
+                children = stage(
+                    "discover_links", self._discover_links, extracted)
+                pending_next, seen_delta, sketch = stage(
+                    "dedup", self._dedup, children, fetch,
+                    budget_due, budget_carry, capped)
+                m2 = stage("commit", self._commit, pool, fetch, docs_f,
+                           pending_next, seen_delta, sketch)
         finally:
             w.release()
         if m2 is None:
@@ -758,11 +807,11 @@ class CrawlEngine:
         w.unpersist.append(fetch)
         return fetch
 
-    def _extract(self, w: _Wave, fetch: DataFrame):
+    def _extract(self, w: _Wave, fetch: DataFrame) -> DataFrame:
         """T1/T2 extraction of the fetched pages — ONE parse per page
-        (UDF), selector scoping F5/F6. Returns (ok, extracted): the
-        fetched-ok rows and their persisted extraction (the docs and
-        pending writes both read it)."""
+        (UDF), selector scoping F5/F6, links canonical on the way out
+        (J4). Returns the persisted extraction of the fetch-ok rows (the
+        docs and pending writes both read it)."""
         cfg, pending_n = self.cfg, w.m.pending_count
         ok = fetch.filter(F.col("fetch_ok"))
         if pending_n < COALESCE_BELOW_ROWS:
@@ -789,17 +838,19 @@ class CrawlEngine:
             from ..functions.html import raw_body_udf
             extracted = extracted.withColumn(
                 "content", raw_body_udf(F.col("html")))
-        # no explicit materialization: the docs write computes the cache
-        # once; the pending write reuses it
+        # no explicit materialization: the docs branch's count collect
+        # computes the cache once; the pending write reuses it
         extracted = extracted.persist()
         w.unpersist.append(extracted)
-        return ok, extracted
+        return extracted
 
-    def _emit_docs(self, w: _Wave, extracted: DataFrame):
-        """The wave's documents: visit-order seq, F4 empty-content skip,
-        the P3 embed budget split, then embed + image validation.
-        Returns (docs_out, carry_docs); ``carry_docs`` (the embed queue
-        rewrite) is None unless the embed budget is on."""
+    def _emit_docs(self, w: _Wave, extracted: DataFrame,
+                   images_f: Future | None) -> tuple[str, str | None, int]:
+        """The docs branch, run as ONE pool task: visit-order seq, F4
+        empty-content skip, the image checks joined in (``images_f``
+        yields them; None = not validated), the P3 embed budget split,
+        embedding, then the documents write and the embed-queue rewrite.
+        Returns _write_docs' (doc_path, queue_path, queue_n)."""
         spark, cfg, m = self.spark, self.cfg, w.m
         # visit order (oracle contract): seq = emitted_so_far + rank(priority),
         # computed WITHOUT a global single-partition sort: the wave is
@@ -808,10 +859,10 @@ class CrawlEngine:
         # sizes + rank within the partition. One tiny extra action (the
         # per-partition counts off the cache); every window below is
         # partitioned, so no WindowExec single-partition warning. The
-        # count collect also fills the `extracted` cache before _commit's
-        # concurrent writes read it. The offsets are a literal map keyed
-        # by every _pid the counts saw, so the lookup is total and costs
-        # no job of its own.
+        # count collect also fills the `extracted` cache that the pending
+        # write, submitted meanwhile, reads too. The offsets are a
+        # literal map keyed by every _pid the counts saw, so the lookup
+        # is total and costs no job of its own.
         if self.track_order:
             cnt_rows = extracted.groupBy("_pid").count().collect()
             offs, acc = [], 0
@@ -825,17 +876,18 @@ class CrawlEngine:
                         + F.lit(m.docs_emitted)).cast("int"))
         else:
             extracted_seq = extracted.withColumn("seq", F.lit(None).cast("int"))
+        emit_cand = self._with_image_checks(
+            extracted_seq.filter(F.length("content") > 0),
+            images_f.result() if images_f is not None else None, w.small)
 
         # P3 embed budget (opt-in): at most embed_budget_per_wave docs
         # are embedded+emitted this wave, the rest defer BY PRIORITY to
         # the embed queue (drained by _drain_wave once fetching is done).
-        emit_cand = extracted_seq.filter(F.length("content") > 0)
         budget = None if self.dry_run else cfg.embed_budget_per_wave
         if budget is not None:
             emit_cand = emit_cand.select(*EMBED_QUEUE_COLS)
             if m.embed_queue_path:
-                backlog = spark.read.parquet(m.embed_queue_path)
-                emit_cand = backlog.unionByName(emit_cand)
+                emit_cand = self._read_embed_queue(w, m).unionByName(emit_cand)
             if budget > cfg.topk_range_threshold:
                 due_docs = self._exact_topk_by_priority(
                     emit_cand, budget, w.unpersist)
@@ -847,22 +899,17 @@ class CrawlEngine:
                 due_docs.select("url_hash"), "url_hash", "left_anti")
         else:
             due_docs, carry_docs = emit_cand, None
-        # image keys come from the cached `extracted` on normal waves
-        # (budget off) so the bounded collects reuse the cache; with the
-        # budget on, keys must cover the backlog too → the due set itself
-        keys_src = extracted if budget is None else due_docs
-        docs_out = self._embed_and_validate(
-            due_docs, keys_src, w.small, m.pending_count,
-            broadcasts=w.broadcasts)
+        docs_out = self._embed(due_docs)
         if self.dry_run:
             docs_out = docs_out.limit(0)
-        return docs_out, carry_docs
+        return self._write_docs(w, docs_out, carry_docs)
 
     def _discover_links(self, w: _Wave, extracted: DataFrame) -> DataFrame:
         """Child frontier rows of the wave's pages: A2 depth gate
-        (extract only below max_depth), F5/F6 selector, F1 shape filter,
-        J4 absolutize, F2 same-host, opt-in robots Disallow, then
-        within-wave first-discovery dedup."""
+        (links followed only below max_depth), F5/F6 selector, F1 shape
+        filter, the J4 canonical url/host the extraction pass already
+        resolved, F2 same-host, opt-in robots Disallow, then within-wave
+        first-discovery dedup. No Python runs here."""
         cfg = self.cfg
         links = (
             extracted.filter(F.col("depth") < cfg.max_depth)
@@ -879,9 +926,9 @@ class CrawlEngine:
             links = links.filter(F.col("lnk.in_selector"))
         links = (
             links.filter(href_is_crawlable_col(F.col("lnk.href")))
-            .withColumn("url", canonicalize_udf(F.col("parent_url"), F.col("lnk.href")))
+            .withColumn("url", F.col("lnk.url"))
             .filter(F.col("url").isNotNull())  # F7 malformed guard
-            .withColumn("host", host_udf(F.col("url")))
+            .withColumn("host", F.col("lnk.host"))
         )
         if cfg.same_host_only:
             links = links.filter(F.col("host") == F.col("root_host"))
@@ -905,8 +952,7 @@ class CrawlEngine:
         return _first_per_url(children)
 
     def _dedup(self, w: _Wave, children: DataFrame, fetch: DataFrame,
-               ok: DataFrame, budget_due: DataFrame, budget_carry: DataFrame,
-               capped: bool):
+               budget_due: DataFrame, budget_carry: DataFrame, capped: bool):
         """pending' = carried rows ∪ children that are new against
         (seen ∪ this wave ∪ carried), exact and sketch-assisted past the
         gate, plus P4 retries. Returns (pending_next, seen_delta,
@@ -923,10 +969,11 @@ class CrawlEngine:
         # seen-set semantics (SURVEY.md §7.3): STANDARD/SITEMAP dedupe at
         # schedule time (all attempted URLs); HEADLESS only on success —
         # failed URLs stay retriable (HeadlessBrowserCrawler.cs:161)
+        attempted = fetch
         if cfg.seen_on_effective == SeenOn.SUCCESS:
-            seen_delta = ok.select("url_hash", "url").withColumn("iter", F.lit(i))
-        else:
-            seen_delta = fetch.select("url_hash", "url").withColumn("iter", F.lit(i))
+            attempted = fetch.filter(F.col("fetch_ok"))
+        seen_delta = attempted.select("url_hash", "url").withColumn(
+            "iter", F.lit(i))
 
         seen_prev = seen_from_log(
             self.store.read_table(spark, m, "frontier_log"),
@@ -970,12 +1017,14 @@ class CrawlEngine:
             pending_next = pending_next.unionByName(retries)
         return pending_next, seen_delta, sketch
 
-    def _commit(self, w: _Wave, fetch: DataFrame, docs_out: DataFrame,
-                carry_docs: DataFrame | None, pending_next: DataFrame,
+    def _commit(self, w: _Wave, pool: ThreadPoolExecutor, fetch: DataFrame,
+                docs_f: Future, pending_next: DataFrame,
                 seen_delta: DataFrame, sketch) -> Manifest | None:
-        """Run the wave's writes — data files first, manifest last — and
-        commit. Returns None when nothing was due (the caller finishes
-        the crawl without referencing this wave's files)."""
+        """Submit the wave's remaining writes beside the running docs
+        branch (``docs_f``), wait for all of them — data files first —
+        then commit the manifest. Returns None when nothing was due (the
+        caller finishes the crawl without referencing this wave's
+        files)."""
         spark, cfg, m, i = self.spark, self.cfg, w.m, w.i
         frontier_log = (
             fetch.select(
@@ -986,39 +1035,25 @@ class CrawlEngine:
             ).drop("fetch_ok")
             # per-partition lineage column (north_rule): which task
             # produced the row — also the source of the wave's
-            # per-partition metrics (readback below, no stats job)
+            # per-partition metrics (observed below, no stats job)
             .withColumn("partition_id", F.spark_partition_id())
         )
-        # ONE write phase: the wave's writes are independent Spark jobs,
-        # submitted together so one job's tasks fill the cores another
-        # leaves idle (guide §2.6):
-        #   - frontier_log (reads the `fetch` cache), then the stats
-        #     readback of the file it wrote;
-        #   - documents and pending' both read the `extracted` cache.
-        #     _emit_docs's count collect has filled it when track_order
-        #     is on; otherwise the first reader fills each block and the
-        #     other waits on Spark's block lock. pending' probes the
-        #     PREVIOUS sketch snapshot through a copy of the index;
-        #   - the sketch merge (reads `fetch`).
-        # A failed write raises out of the pool. The manifest and the
-        # engine's sketch index (adopted after the commit) then stay at
-        # wave i-1, and a re-run of the wave overwrites the orphan files.
-        # The empty-final-wave check comes after the pool for the same
-        # reason: a would-be-final wave leaves only orphans.
-        def log_job():
-            path = self.store.write_delta(frontier_log, "frontier_log", i)
-            rows = (
-                spark.read.parquet(path)
-                .groupBy("partition_id")
-                .agg(
-                    F.sum((F.col("state") == "fetched").cast("long"))
-                     .alias("fetched"),
-                    F.sum((F.col("state") != "fetched").cast("long"))
-                     .alias("failed"),
-                ).collect()
-            )
-            return path, rows
-
+        # the per-partition fetched/failed counts ride the log write: one
+        # histogram of partition_id per state. A histogram is exact while
+        # its bin count covers the distinct values, and every partition
+        # that emits a row holds one of the wave's ≤ pending_count rows;
+        # only the non-empty bins reach the driver.
+        nb = F.lit(max(2, m.pending_count))
+        log_obs = Observation(f"log_{i}")
+        frontier_log = frontier_log.observe(
+            log_obs,
+            F.histogram_numeric(F.when(F.col("state") == "fetched",
+                                       F.col("partition_id")), nb)
+             .alias("fetched"),
+            F.histogram_numeric(F.when(F.col("state") != "fetched",
+                                       F.col("partition_id")), nb)
+             .alias("failed"),
+        )
         obs = Observation(f"pending_{i}")
         pending_obs = pending_next.observe(
             obs,
@@ -1031,34 +1066,40 @@ class CrawlEngine:
             path = self.store.write_pending(pending_obs, i)
             return path, int(obs.get["n"]), int(obs.get["new"] or 0)
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            log_f = pool.submit(log_job)
-            doc_f = pool.submit(self.store.write_delta, docs_out,
-                                "documents", i)
-            pend_f = pool.submit(pending_job)
-            sk_f = (pool.submit(self._merge_seen_delta, seen_delta, i)
-                    if sketch is not None else None)
-            log_path, part_rows = log_f.result()
-            doc_path = doc_f.result()
-            pending_path, pending_next_n, new_links_n = pend_f.result()
-            # a wave before the gate references no snapshot: one left
-            # from an earlier run would miss this wave's delta
-            sketch_index, sketch_path = (
-                sk_f.result() if sk_f is not None
-                else (self._sketch_index, None))
-        ok_n = int(sum(r["fetched"] or 0 for r in part_rows))
-        due_n = int(ok_n + sum(r["failed"] or 0 for r in part_rows))
+        # the wave's other independent Spark jobs, beside the docs branch
+        # and the image checks (guide §2.6 — one job's tasks fill the
+        # cores another leaves idle):
+        #   - frontier_log reads the `fetch` cache;
+        #   - pending' reads the `extracted` cache, which the docs
+        #     branch's count collect fills when track_order is on
+        #     (otherwise the first reader fills each block and the other
+        #     waits on Spark's block lock); it probes the PREVIOUS sketch
+        #     snapshot through a copy of the index;
+        #   - the sketch merge reads `fetch`.
+        # A failed job raises out of .result(). The manifest and the
+        # engine's sketch index (adopted after the commit) then stay at
+        # wave i-1, and a re-run of the wave overwrites the orphan files.
+        # The empty-final-wave check comes after the jobs for the same
+        # reason: a would-be-final wave leaves only orphans.
+        log_f = pool.submit(self.store.write_delta, frontier_log,
+                            "frontier_log", i)
+        pend_f = pool.submit(pending_job)
+        sk_f = (pool.submit(self._merge_seen_delta, seen_delta, i)
+                if sketch is not None else None)
+        log_path = log_f.result()
+        doc_path, queue_path, queue_n = docs_f.result()
+        pending_path, pending_next_n, new_links_n = pend_f.result()
+        # a wave before the gate references no snapshot: one left from
+        # an earlier run would miss this wave's delta
+        sketch_index, sketch_path = (
+            sk_f.result() if sk_f is not None else (self._sketch_index, None))
+        hists = log_obs.get
+        fetched, failed = ({int(b["x"]): int(b["y"]) for b in hists[k] or []}
+                           for k in ("fetched", "failed"))
+        ok_n = sum(fetched.values())
+        due_n = ok_n + sum(failed.values())
         if due_n == 0:
             return None
-
-        # P3: persist the deferred-embed queue (full rewrite, like
-        # pending; counts ride the write via observe)
-        queue_path, queue_n = m.embed_queue_path, m.embed_queue_count
-        if carry_docs is not None:
-            qobs = Observation(f"equeue_{i}")
-            carry_q = carry_docs.observe(qobs, F.count(F.lit(1)).alias("n"))
-            queue_path = self.store.write_delta(carry_q, "embed_queue", i)
-            queue_n = int(qobs.get["n"])
 
         # metrics: per-partition fetch lineage rows + a global (-1) row,
         # spilled to the parquet metrics table (tiny driver-side pyarrow
@@ -1066,9 +1107,9 @@ class CrawlEngine:
         # wave's rows for inspection/console
         wall_ms = (time.monotonic() - w.t0) * 1000.0
         met_rows = [
-            [i, int(r["partition_id"]), None, None, int(r["fetched"] or 0),
-             int(r["failed"] or 0), None, None]
-            for r in part_rows
+            [i, pid, None, None, fetched.get(pid, 0), failed.get(pid, 0),
+             None, None]
+            for pid in sorted(fetched.keys() | failed.keys())
         ] + [[i, -1, due_n, None, ok_n, due_n - ok_n, new_links_n, wall_ms]]
         met_path = self.store.write_metrics_rows(met_rows, i)
         fetched_count = due_n if cfg.seen_on_effective == SeenOn.SCHEDULE else ok_n

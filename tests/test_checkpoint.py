@@ -10,12 +10,13 @@ from azuresearchcrawlervector_spark.config import CrawlConfig, CrawlMode
 from azuresearchcrawlervector_spark.plans.checkpoint import SnapshotStore
 from azuresearchcrawlervector_spark.plans.crawl import CrawlEngine
 from azuresearchcrawlervector_spark.sources.fixtures import test_website as website1_graph
-from azuresearchcrawlervector_spark.sources.synthetic import pages_df
+from azuresearchcrawlervector_spark.sources.synthetic import images_df, pages_df
 
 
 def _collect_state(spark, res):
     docs = sorted(
-        (r["seq"], r["url"], r["id"], r["title"], r["content"])
+        (r["seq"], r["url"], r["id"], r["title"], r["content"],
+         r["img_ok"], r["psnr_db"], r["caption_ok"])
         for r in res.documents(spark).collect()
     )
     seen = sorted((r["url_hash"], r["url"], r["iter"]) for r in res.seen(spark).collect())
@@ -99,49 +100,74 @@ def test_truncated_tmp_manifest_ignored(tmp_path):
     assert not list(mdir.glob("*.tmp"))
 
 
-@pytest.mark.parametrize("sketch", [False, True], ids=["no_sketch", "sketch"])
+@pytest.mark.parametrize("sketch,crash", [
+    (False, "documents"), (True, "documents"), (True, "images"),
+], ids=["no_sketch", "sketch", "images"])
 def test_crash_in_write_phase_resumes_bit_identical(spark, tmp_path,
-                                                    monkeypatch, sketch):
-    """The documents write of wave 2 fails while the wave's other writes
-    (frontier_log, pending', sketch merge) run beside it: no manifest
+                                                    monkeypatch, sketch, crash):
+    """A job of wave 2 fails while the wave's other jobs (frontier_log,
+    pending', sketch merge) run beside it — the documents write, or
+    (``images``) the image-check job off the fetch rows: no manifest
     past wave 1 is committed, the engine's sketch index stays at wave 1,
-    and resuming on the same engine equals an uninterrupted crawl."""
+    and resuming on the same engine equals an uninterrupted crawl,
+    image checks included."""
     import threading
     from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    import azuresearchcrawlervector_spark.plans.crawl as crawl_mod
 
     g = website1_graph()
     cfg = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD)
     if sketch:
         cfg = replace(cfg, seen_sketch_min_pages=0)
     pages = pages_df(spark, g)
+    images = images_df(spark, g) if crash == "images" else None
     full = CrawlEngine(spark, pages, cfg, str(tmp_path / "full"),
-                       validate_images=False).run()
+                       images=images).run()
 
     real_write = SnapshotStore.write_delta
-    log_started, crashes = threading.Event(), []
+    real_validate = crawl_mod.with_image_validation
+    log_started, crashes, checks = threading.Event(), [], []
 
     def flaky_write(self, df, table, iteration):
         if iteration == 2 and table == "frontier_log":
             log_started.set()
-        if iteration == 2 and table == "documents" and not crashes:
+        if (crash == "documents" and iteration == 2
+                and table == "documents" and not crashes):
             crashes.append(table)
             assert log_started.wait(timeout=60)
             raise RuntimeError("injected documents write failure")
         return real_write(self, df, table, iteration)
 
+    def flaky_validate(df, *args, **kw):
+        out = real_validate(df, *args, **kw)
+        checks.append(len(checks) + 1)
+        if checks[-1] == 2:  # wave 2's image check: its job raises
+            crashes.append("images")
+            out = out.withColumn("img_ok", F.raise_error(
+                F.lit("injected image check failure")).cast("boolean"))
+        return out
+
     monkeypatch.setattr(SnapshotStore, "write_delta", flaky_write)
+    monkeypatch.setattr(crawl_mod, "with_image_validation", flaky_validate)
     eng = CrawlEngine(spark, pages, cfg, str(tmp_path / "crash"),
-                      validate_images=False)
-    with pytest.raises(RuntimeError, match="injected"):
+                      images=images)
+    # the documents write raises in the driver; the image check's job
+    # raises in Spark, which surfaces as a captured JVM exception
+    with pytest.raises(RuntimeError if crash == "documents" else Exception,
+                       match="injected"):
         eng.run()
     m = eng.store.latest()
     assert m.iter == 1 and not m.finished
+    assert log_started.is_set()
     if sketch:
         assert eng._sketch_index == eng.store.read_sketch_index(
             m.seen_sketch_path)
 
     resumed = eng.run(resume=True)
-    assert crashes == ["documents"]
+    assert crashes == [crash]
     assert _collect_state(spark, resumed) == _collect_state(spark, full)
     assert _metrics(spark, resumed) == _metrics(spark, full)
     assert resumed.manifest.iter == full.manifest.iter

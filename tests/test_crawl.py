@@ -198,7 +198,9 @@ def test_range_partitioned_topk_cap(spark, tmp_ckpt):
 def test_visit_order_across_range_partitions(spark, tmp_ckpt):
     # a wave with more than ROWS_PER_UDF_TASK pending rows is range-
     # partitioned by priority into several partitions, so its visit-
-    # order seq adds a per-partition offset for more than one _pid
+    # order seq adds a per-partition offset for more than one _pid; its
+    # fetch rows span several partitions too, so the exact per-partition
+    # metrics are checked across them
     from collections import Counter
 
     from azuresearchcrawlervector_spark.plans.crawl import ROWS_PER_UDF_TASK
@@ -214,3 +216,18 @@ def test_visit_order_across_range_partitions(spark, tmp_ckpt):
     got = [(r["seq"], r["url"]) for r in
            res.documents(spark).orderBy("seq").collect()]
     assert got == [(d["seq"], d["url"]) for d in sim.documents]
+    # the per-partition metrics rows (observed on the frontier_log write)
+    # equal a groupBy over what that write produced, on the big wave too
+    log = res.frontier_log(spark)
+    want = sorted(
+        (r["iter"], r["partition_id"], r["fetched"], r["failed"]) for r in
+        log.groupBy("iter", "partition_id").agg(
+            F.sum((F.col("state") == "fetched").cast("long")).alias("fetched"),
+            F.sum((F.col("state") != "fetched").cast("long")).alias("failed"),
+        ).collect())
+    mets = sorted((r["iter"], r["partition_id"], r["fetched"], r["failed"])
+                  for r in res.metrics(spark).collect()
+                  if r["partition_id"] >= 0)
+    assert mets == want
+    big = max(per_wave, key=per_wave.get)
+    assert len({p for it, p, _, _ in mets if it == big}) >= 2

@@ -264,3 +264,77 @@ def test_selector_property_vs_naive_dom():
         engine = [h for h, _p, s in links if s]
         naive = _naive_inscope_links(html, sel)
         assert engine == naive, (trial, sel, html, engine, naive)
+
+
+# ------------------------- fused link pass: extraction UDF ≡ core.urls
+_EDGE_HREFS = [
+    "rel/page.html", "../up.html", "/abs/path?q=1#frag", "//other.example.com/x",
+    "#frag", "javascript:void(0)", "mailto:a@b.example.com", "tel:+123",
+    "HTTP://UPPER.Example.COM/Path", "http://example.com:80/port",
+    "https://example.com:443/", "http://example.com:8080/kept",
+    "  /spaced.html  ", "\t/tabbed.html", "", "http://",
+]
+
+
+def _expected_link(page_url, href):
+    from azuresearchcrawlervector_spark.core.urls import (
+        canonicalize, host_of, href_is_crawlable,
+    )
+    url = canonicalize(page_url, href) if href_is_crawlable(href) else None
+    return url, host_of(url)
+
+
+def test_extraction_links_canonical_parity(spark):
+    """Every link the extraction UDF returns carries the url/host that
+    core.urls.canonicalize/host_of give against the page URL, and NULL
+    where the F1 shape filter rejects the href: on every website1 and
+    website2 fixture page, and on a page of edge hrefs."""
+    from azuresearchcrawlervector_spark.functions.html import with_extraction
+    from azuresearchcrawlervector_spark.sources.fixtures import (
+        test_website2 as website2_graph,
+    )
+    from azuresearchcrawlervector_spark.sources.synthetic import pages_df
+
+    edge_url = "http://example.com/dir/page.html"
+    edge_html = "<html><body>" + "".join(
+        f'<a href="{h}">x</a>' for h in _EDGE_HREFS) + "</body></html>"
+    pages = pages_df(spark, website1_graph()).unionByName(
+        pages_df(spark, website2_graph())).select("url", "html")
+    pages = pages.unionByName(
+        spark.createDataFrame([(edge_url, edge_html)], "url string, html string"))
+    rows = with_extraction(pages.filter("html is not null"), "html").collect()
+    n_links = n_resolved = 0
+    for r in rows:
+        for lnk in r["links"]:
+            assert (lnk["url"], lnk["host"]) == _expected_link(
+                r["url"], lnk["href"]), (r["url"], lnk)
+            n_links += 1
+            n_resolved += lnk["url"] is not None
+    edge = next(r for r in rows if r["url"] == edge_url)
+    assert [lnk["href"] for lnk in edge["links"]] == _EDGE_HREFS
+    got = {lnk["href"]: lnk["url"] for lnk in edge["links"]}
+    assert got["//other.example.com/x"] == "http://other.example.com/x"
+    assert got["HTTP://UPPER.Example.COM/Path"] == "http://upper.example.com/Path"
+    assert got["http://example.com:80/port"] == "http://example.com/port"
+    assert got["http://example.com:8080/kept"] == "http://example.com:8080/kept"
+    assert got["  /spaced.html  "] == "http://example.com/spaced.html"
+    assert got["/abs/path?q=1#frag"] == "http://example.com/abs/path?q=1"
+    assert got["rel/page.html"] is None and got["#frag"] is None
+    assert n_links > 100 and n_resolved > 100
+
+
+def test_with_extraction_without_url_column(spark):
+    """An html-only frame still gets title/content/links; links resolve
+    only when the href is absolute."""
+    from azuresearchcrawlervector_spark.functions.html import with_extraction
+
+    html = ("<html><head><title>T</title></head><body><p>x</p>"
+            "<a href='/rel'>r</a><a href='http://A.example.com/y'>a</a>"
+            "</body></html>")
+    df = spark.createDataFrame([(html,)], "html string")
+    r = with_extraction(df, "html").collect()[0]
+    assert (r["title"], r["content"]) == ("T", "x r a")
+    assert [(lnk["href"], lnk["url"], lnk["host"]) for lnk in r["links"]] == [
+        ("/rel", None, None),
+        ("http://A.example.com/y", "http://a.example.com/y", "a.example.com"),
+    ]

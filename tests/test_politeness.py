@@ -181,3 +181,47 @@ def test_embed_budget_drain_resumable(spark, tmp_path):
     b = sorted((r["seq"], r["url"], r["id"])
                for r in res_kr.documents(spark).collect())
     assert a == b and len(a) == 19
+
+
+def test_embed_queue_from_older_build_checked_on_drain(spark, tmp_path):
+    """A P3 embed queue written before deferred rows carried their image
+    checks (no img_ok/psnr_db/caption_ok columns) is checked when it is
+    read back, through the fetch wave's image-check helper: the resumed
+    crawl's documents equal an uninterrupted budgeted crawl's."""
+    import shutil
+
+    from azuresearchcrawlervector_spark.sources.fixtures import (
+        test_website as website1_graph,
+    )
+    from azuresearchcrawlervector_spark.sources.synthetic import images_df
+
+    g = website1_graph()
+    pages, images = pages_df(spark, g), images_df(spark, g)
+
+    def eng(tag, max_iters=1000):
+        cfg = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD,
+                          embed_budget_per_wave=3)
+        return CrawlEngine(spark, pages, cfg, str(tmp_path / tag),
+                           images=images, max_iters=max_iters)
+
+    res_full = eng("full").run()
+    partial = eng("old", max_iters=3).run()
+    assert partial.manifest.embed_queue_count > 0
+    queue = partial.manifest.embed_queue_path
+    old = tmp_path / "old_queue"
+    spark.read.parquet(queue).drop("img_ok", "psnr_db", "caption_ok") \
+        .write.parquet(str(old))
+    shutil.rmtree(queue)
+    shutil.move(str(old), queue)
+    assert "img_ok" not in spark.read.parquet(queue).columns
+
+    res = eng("old").run(resume=True)
+    assert res.manifest.finished and res.manifest.embed_queue_count == 0
+
+    def docs(r):
+        return sorted((d["seq"], d["url"], d["id"], d["img_ok"], d["psnr_db"],
+                       d["caption_ok"]) for d in r.documents(spark).collect())
+
+    got, want = docs(res), docs(res_full)
+    assert got == want and len(got) == 19
+    assert all(d[3] for d in got)
