@@ -56,12 +56,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # ---------------------------------------------------------------- queries
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from azuresearchcrawlervector_spark.functions.html import (
+        clean_whitespace_col,
+    )
     from azuresearchcrawlervector_spark.functions.text import (
         fingerprint_col, lang_id_col, quality_score_col,
         subword_count_col, token_count_col,
     )
     from azuresearchcrawlervector_spark.operators.dedup import (
-        duplicate_clusters, duplicate_clusters_star, embedding_neardup_lsh,
+        duplicate_clusters_star, embedding_neardup_lsh,
         exact_dedup, hamming_pairs,
         minhash_lsh_pairs, ngram_jaccard_pairs, simhash64,
     )
@@ -160,7 +163,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_whitespace_cleanup(spark, sf):
         # T2 whitespace-collapse semantics as built-ins
         d = spark.read.parquet(_t(sf, "documents"))
-        cleaned = F.trim(F.regexp_replace(F.regexp_replace(F.col("text"), r"[\r\n]+", " "), r"[ \t]+", " "))
+        cleaned = clean_whitespace_col(F.col("text"))
         return d.select("doc_id", F.length(cleaned).alias("clean_len"))
 
     def q_event_window_counts(spark, sf):
@@ -210,16 +213,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def q_dedup_clusters(spark, sf):
         # duplicate CLUSTERING: connected components over the pruned
         # n-gram Jaccard pairs → (doc_id, cluster_id=min id in
-        # component) — the canonical-keeper step after pair generation
-        d = spark.read.parquet(_t(sf, "documents"))
-        pairs = ngram_jaccard_pairs(d, k=3, threshold=0.2, max_df=100)
-        return duplicate_clusters(pairs).orderBy("doc_id")
-
-    def q_dedup_clusters_star(spark, sf):
-        # SAME clustering contract through the large-star/small-star
-        # path (O(log n) rounds on any graph vs label-prop's
-        # O(diameter)) — both run against the identical WITH RECURSIVE
-        # DuckDB oracle
+        # component) — the canonical-keeper step after pair generation.
+        # Large-star/small-star CC: O(log n) rounds on any graph. Served
+        # under both declared names (dedup_clusters, dedup_clusters_star)
         d = spark.read.parquet(_t(sf, "documents"))
         pairs = ngram_jaccard_pairs(d, k=3, threshold=0.2, max_df=100)
         return duplicate_clusters_star(pairs).orderBy("doc_id")
@@ -609,7 +605,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_exact": q_dedup_exact,
         "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
         "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_star": q_dedup_clusters_star,
+        "dedup_clusters_star": q_dedup_clusters,
         "token_counts": q_token_counts,
         "quality_scores": q_quality,
         "lang_id": q_lang_id,
@@ -1775,8 +1771,8 @@ def _oracle_sql_base() -> dict[str, str]:
 
 def oracle_sql() -> dict[str, str]:
     sql = _oracle_sql_base()
-    # the star-CC path implements the SAME clustering contract — one
-    # oracle, two Spark algorithms (label-prop and large-star/small-star)
+    # both CC query names are served by the same large-star/small-star
+    # query, so they share one oracle
     sql["dedup_clusters_star"] = sql["dedup_clusters"]
     # partitioned-layout ANN variants return identical results to their
     # in-scan twins (the bucket/list filter becomes partition pruning) —

@@ -5,7 +5,7 @@
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from enum import Enum
 
 
@@ -55,20 +55,6 @@ class CrawlConfig:
     # T3 raw-HTML mode: False stores <body> inner HTML, scripts kept
     # (TextExtractor.cs:45-48); True = cleaned-text extraction
     extract_text: bool = True
-    # waves up to this many rows broadcast-probe the payload tables
-    # (big side streamed, never shuffled). Larger waves switch to the
-    # SKETCH-FILTERED fetch: a Bloom sketch of the wave's url hashes
-    # (built in parallel, ~2 bytes/key) filters the payload scan on the
-    # executors, then a wave-sized shuffle join resolves exactly —
-    # driver-side broadcast build time would otherwise grow linearly
-    # with wave size and serialize the whole crawl.
-    broadcast_wave_threshold: int = 100_000
-    # A1 binding-cap strategy: above this K, orderBy().limit(K) (a
-    # driver-side merge of up to K rows per partition) is replaced by
-    # the exact range-partitioned top-K (crawl.py
-    # _exact_topk_by_priority) — driver traffic drops to one count per
-    # partition
-    topk_range_threshold: int = 50_000
     # J1-J3 seen sketch gate: the first wave that starts with at least
     # this many pages fetched builds the sketch once from the frontier
     # log; every later wave probes it and merges its own delta in

@@ -12,9 +12,8 @@ without touching frames 0..k-1.
 This retires the round-1..3 ``NotImplementedError`` video stub in
 operators/multimodal.py for the ``mjpeg``/AVI case (reference scope:
 the reference crawler has no media pipeline at all — this belongs to
-the beyond-the-reference multimodal family). mp3/ogg audio remain
-stubs; a production deployment swaps this module for ffmpeg with no
-Spark-side changes.
+the beyond-the-reference multimodal family). A production deployment
+swaps this module for ffmpeg with no Spark-side changes.
 
 Bit-exactness contract (tests/test_video.py): every decoded frame ==
 core.jpeg.reconstruct(frame, quality) — the container + entropy layer

@@ -556,72 +556,20 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
 
 # --------------------------------------------------- duplicate clustering
-def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
-                       id_b: str = "id_b", max_iters: int = 50) -> DataFrame:
-    """Connected components over a duplicate-pair list → (doc_id,
-    cluster_id), cluster_id = MIN doc id in the component (the canonical
-    "keeper" every pipeline needs after pair generation: drop all rows
-    whose doc_id != cluster_id).
-
-    Min-label propagation: each node repeatedly takes the minimum of its
-    own label and its neighbors' labels until a fixpoint — O(diameter)
-    rounds of one equi-join + map-side-combinable min aggregation each;
-    the driver only sees a 1-row convergence probe per round. Duplicate
-    components are overwhelmingly SHALLOW (near-clique clusters from
-    pair generators), so diameter is small in practice; for adversarial
-    long-chain graphs at 10^10 scale use duplicate_clusters_star
-    (large-star/small-star, O(log n) rounds, identical output contract).
-    Deterministic; only ids appearing in at least one pair are returned
-    (singletons are trivially their own cluster).
-    """
-    e = pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-    edges = (
-        e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .distinct().persist()
-    )
-    # each round's labels are EAGERLY localCheckpoint-ed: truncates the
-    # logical plan (round r would otherwise nest r joins deep — Catalyst
-    # analysis alone dominates past ~8 rounds) and materializes the
-    # round so the convergence probe and the next round share one
-    # computation
-    labels = (edges.select("u").distinct()
-              .withColumn("label", F.col("u")).localCheckpoint(eager=True))
-    for _ in range(max_iters):
-        neigh = (
-            edges.join(
-                labels.select(F.col("u").alias("v"),
-                              F.col("label").alias("nlabel")), "v")
-            .groupBy("u").agg(F.min("nlabel").alias("minn"))
-        )
-        new_labels = (
-            labels.join(neigh, "u", "left")
-            .withColumn("nlab", F.least("label", F.coalesce("minn", "label")))
-            .select("u", F.col("nlab").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "u")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(F.col("u").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
-
-
 def duplicate_clusters_star(pairs: DataFrame, id_a: str = "id_a",
                             id_b: str = "id_b", max_iters: int = 60,
                             stats: dict | None = None) -> DataFrame:
-    """Connected components via alternating large-star/small-star — the
-    published MapReduce CC algorithm with O(log n) round convergence on
-    ANY graph (vs min-label propagation's O(diameter): a 10^7-node
-    duplicate CHAIN would need 10^7 label rounds but ~2·log2 n star
-    rounds). Same output contract as duplicate_clusters: (doc_id,
-    cluster_id = component-min id) for every id in at least one pair.
+    """Connected components over a duplicate-pair list → (doc_id,
+    cluster_id), cluster_id = MIN doc id in the component (the canonical
+    "keeper" every pipeline needs after pair generation: drop all rows
+    whose doc_id != cluster_id). Deterministic; only ids appearing in at
+    least one pair are returned (singletons are trivially their own
+    cluster).
+
+    Alternating large-star/small-star — the published MapReduce CC
+    algorithm with O(log n) round convergence on ANY graph (min-label
+    propagation needs O(diameter) rounds: a 10^7-node duplicate CHAIN
+    would need 10^7 label rounds but ~2·log2 n star rounds).
 
     Per round (each step one equi-join + a map-side-combinable min agg):
     - large-star, per center u over ALL neighbors Γ(u):

@@ -1,41 +1,22 @@
-"""Multimodal column handling: image/audio/video as opaque BINARY columns
+"""Multimodal column handling: image and video as opaque BINARY columns
 with typed metadata, processed by Arrow-batched UDFs over mapInPandas.
 
-What is REAL here (fully implemented + tested):
-- image decode (PNG/qpng via core/images.py), resize (area/block-mean),
-  grayscale feature vector, phash — the full Spark-side plumbing: schema,
-  partitioning, UDF signatures, Arrow batch shapes.
+- Images: decode (PNG/qpng via core/images.py, baseline JPEG via
+  core/jpeg.py — the lane-parallel batch decoder for jpeg rows), area
+  resize, a grayscale feature vector + phash, and header-only metadata
+  (core/images.py sniff_image) for cheap pre-decode validation.
+- Video: MJPEG in THREE containers — AVI (core/video.py, RIFF), MP4
+  (core/mp4.py, ISO BMFF) and Matroska/WebM (core/mkv.py, EBML):
+  sample_frames parses the real container and entropy-decodes only the
+  sampled frames; for non-MJPEG codecs in MP4/MKV it emits real
+  keyframe BYTE RANGES from the sample table / block index. Animated
+  GIF (core/gif.py) is a fourth intra-only container: sampling
+  decompresses ONLY the wanted frames.
+- Unrecognized video containers are a clearly-marked stub:
+  ``NotImplementedError``, with a deterministic fake behind
+  ``allow_fake=True`` so the batch plumbing is exercised by tests.
 
-What is REAL here, continued:
-- baseline JPEG (core/jpeg.py — sequential DCT, vectorized LUT entropy
-  decode; the 'jpeg' fmt everywhere including the 120k-row bench),
-- WAV audio: stdlib-parsed PCM decode + RMS/zero-crossing/spectral-
-  centroid features, the ITU-T G.711 µ-law compressed codec, and IMA
-  ADPCM (WAVE fmt 0x0011 — adaptive delta prediction, 4 bits/sample)
-  (core/audio.py), plus FLAC (core/flac.py — full from-scratch lossless
-  codec: fixed + LPC prediction, partitioned rice/rice2 residuals,
-  stereo decorrelation, wasted bits, CRC-8/CRC-16/MD5 verification),
-- MJPEG video in THREE containers: AVI (core/video.py — RIFF), MP4
-  (core/mp4.py — ISO BMFF) and Matroska/WebM (core/mkv.py — EBML):
-  sample_frames parses the real container and entropy-decodes only
-  the sampled frames; for non-MJPEG codecs in MP4/MKV it emits real
-  keyframe BYTE RANGES from the sample table / block index; animated
-  GIF (core/gif.py — full LZW codec + median-cut palettes) is a
-  fourth intra-only container: sampling decompresses ONLY the wanted
-  frames (block walk skips the rest),
-- Ogg container metadata (core/ogg.py — CRC-validated pages +
-  Vorbis/Opus ident headers) and MPEG audio / mp3 metadata
-  (core/mp3.py — full frame-header walk, exact duration, CBR/VBR):
-  audio_metadata_table reports codec/channels/rate/duration with no
-  codec library.
-
-What is a clearly-marked STUB (no codec libraries in this container):
-- compressed-audio WAVEFORM decode (mp3, and Vorbis/Opus packets) +
-  unrecognized video containers (raw streams with no AVI/MP4/MKV
-  signature): ``NotImplementedError`` for real decode, with a
-  deterministic fake behind ``allow_fake=True`` so the batch plumbing
-  is exercised end-to-end by tests. Swapping in PIL/ffmpeg touches
-  ONLY the kernel bodies, never the Spark plumbing.
+The crawl's own image checks live in functions/imagefn.py, not here.
 """
 
 from __future__ import annotations
@@ -189,161 +170,6 @@ def validate_image_headers(df: DataFrame) -> DataFrame:
             & (F.col("h_sniffed") == F.col("h")))
         .drop("fmt_sniffed", "w_sniffed", "h_sniffed", "header_ok")
     )
-
-
-def decode_audio(buf: bytes, fmt: str, allow_fake: bool = False) -> np.ndarray:
-    """WAV: REAL stdlib PCM decode; g711u: REAL ITU-T G.711 µ-law
-    compressed decode (both core/audio.py). Other compressed formats
-    (mp3/ogg/...): no codec in this container — with allow_fake, returns
-    a deterministic pseudo-waveform derived from the byte content so the
-    Spark plumbing can be tested; raises otherwise."""
-    if fmt == "wav":
-        from ..core.audio import wav_decode
-        pcm, _rate = wav_decode(buf)
-        return (pcm.astype(np.float32) / 32768.0).mean(axis=1)
-    if fmt == "g711u":
-        # REAL compressed audio: ITU-T G.711 µ-law (core/audio.py)
-        from ..core.audio import g711u_decode
-        pcm, _rate = g711u_decode(buf)
-        return (pcm.astype(np.float32) / 32768.0).mean(axis=1)
-    if fmt == "adpcm":
-        # REAL compressed audio #2: IMA ADPCM in the real WAVE
-        # container (fmt tag 0x0011) — adaptive delta prediction,
-        # 4 bits/sample (core/audio.py)
-        from ..core.audio import adpcm_decode
-        pcm, _rate = adpcm_decode(buf)
-        return (pcm.astype(np.float32) / 32768.0).mean(axis=1)
-    if fmt == "flac":
-        # REAL compressed audio #3: FLAC — lossless LPC + rice coding
-        # (core/flac.py, full from-scratch codec, CRC+MD5 verified)
-        from ..core.flac import flac_decode
-        pcm, _rate = flac_decode(buf)
-        return (pcm.astype(np.float32) / 32768.0).mean(axis=1)
-    if not allow_fake:
-        raise NotImplementedError(
-            f"{fmt!r} decode requires an external codec (not in this "
-            "container); pass allow_fake=True for the deterministic "
-            "test stand-in, or use fmt='wav'/'g711u'/'adpcm'/'flac' "
-            "(real codecs)")
-    seed = int.from_bytes(buf[:8].ljust(8, b"\0"), "little", signed=False) % (2**32)
-    rng = np.random.default_rng(seed)
-    return rng.standard_normal(1600).astype(np.float32)
-
-
-AUDIO_FEATURE_SCHEMA = ("media_id string, rms double, zcr_hz double, "
-                        "centroid_hz double, duration_s double, sample_rate int")
-
-
-def _decode_waveform(data: bytes):
-    """Container-sniffing PCM decode — every REAL codec the repo
-    carries: WAVE/PCM, IMA-ADPCM WAVE, G.711 µ-law, FLAC. Returns
-    ((n, ch) int16, rate); unknown containers raise."""
-    import struct as _struct
-
-    from ..core.audio import adpcm_decode, g711u_decode, wav_decode
-    from ..core.flac import flac_decode, is_flac
-
-    data = bytes(data)
-    if is_flac(data):
-        return flac_decode(data)
-    if data[:5] == b"G711U":
-        return g711u_decode(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        (fmt_tag,) = _struct.unpack("<H", data[20:22])
-        return adpcm_decode(data) if fmt_tag == 0x11 else wav_decode(data)
-    raise ValueError("unknown audio container")
-
-
-def audio_feature_table(df: DataFrame) -> DataFrame:
-    """mapInPandas audio feature extraction over (media_id, bytes) —
-    RMS, zero-crossing rate, spectral centroid, duration. Real decode
-    for every container the repo carries (WAVE/PCM, IMA ADPCM, G.711
-    µ-law, FLAC — see _decode_waveform) + vectorized numpy features;
-    scales like every other Arrow kernel here (pure per-row work, no
-    shuffle)."""
-    from ..core.audio import audio_features
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["bytes"]):
-                pcm, rate = _decode_waveform(buf)
-                rows.append({"media_id": mid, **{
-                    k: v for k, v in audio_features(pcm, rate).items()}})
-            out = pd.DataFrame(rows, columns=["media_id", "rms", "zcr_hz",
-                                              "centroid_hz", "duration_s",
-                                              "sample_rate"])
-            out["sample_rate"] = out["sample_rate"].astype("int32")
-            yield out
-
-    return df.select("media_id", "bytes").mapInPandas(run, AUDIO_FEATURE_SCHEMA)
-
-
-AUDIO_META_SCHEMA = ("media_id string, container string, codec string, "
-                     "channels int, sample_rate int, duration_s double")
-
-
-def audio_metadata_table(df: DataFrame) -> DataFrame:
-    """Container-level audio metadata over (media_id, bytes) — REAL for
-    every format the repo carries a container for: RIFF/WAVE (PCM,
-    G.711 µ-law, IMA ADPCM — full decode, so duration is exact), Ogg
-    (core/ogg.py — per-page CRC-validated parse + Vorbis/Opus
-    identification headers) and MPEG audio / mp3 (core/mp3.py —
-    full frame-header walk, so duration and CBR-vs-VBR are exact);
-    codec/channels/rate/duration WITHOUT any codec library, which is
-    the training-data-audit use case. Unknown containers raise — no
-    silent fake here, metadata is cheap truth."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct
-
-        from ..core.audio import adpcm_decode, g711u_decode, wav_decode
-        from ..core.flac import flac_parse, is_flac
-        from ..core.mp3 import is_mp3, mp3_parse
-        from ..core.ogg import is_ogg, ogg_parse
-
-        for pdf in batches:
-            rows = []
-            for mid, buf in zip(pdf["media_id"], pdf["bytes"]):
-                data = bytes(buf)
-                if is_flac(data):
-                    m = flac_parse(data)   # STREAMINFO only — no decode
-                    rows.append((mid, "flac", "flac", m["channels"],
-                                 m["sample_rate"], m["duration_s"]))
-                    continue
-                if is_ogg(data):
-                    m = ogg_parse(data)
-                    rows.append((mid, "ogg", m["codec"], m["channels"],
-                                 m["sample_rate"], m["duration_s"]))
-                    continue
-                if is_mp3(data):
-                    m = mp3_parse(data)
-                    rows.append((mid, "mpeg", m["codec"], m["channels"],
-                                 m["sample_rate"], m["duration_s"]))
-                    continue
-                if data[:5] == b"G711U":   # the repo's µ-law container
-                    pcm, rate = g711u_decode(data)
-                    rows.append((mid, "g711u", "g711_ulaw", pcm.shape[1],
-                                 rate, round(len(pcm) / rate, 6)))
-                    continue
-                if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-                    raise ValueError("unknown audio container")
-                (fmt_tag,) = struct.unpack("<H", data[20:22])
-                dec = {1: ("pcm_s16le", wav_decode),
-                       0x11: ("ima_adpcm", adpcm_decode)}.get(fmt_tag)
-                if dec is None:
-                    raise ValueError(f"unknown WAVE fmt tag {fmt_tag}")
-                name, fn = dec
-                pcm, rate = fn(data)
-                rows.append((mid, "wave", name, pcm.shape[1], rate,
-                             round(len(pcm) / rate, 6)))
-            out = pd.DataFrame(rows, columns=[
-                "media_id", "container", "codec", "channels",
-                "sample_rate", "duration_s"])
-            out["channels"] = out["channels"].astype("int32")
-            out["sample_rate"] = out["sample_rate"].astype("int32")
-            yield out
-
-    return df.select("media_id", "bytes").mapInPandas(run, AUDIO_META_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_n: int = 10, n_frames: int = 3,

@@ -32,7 +32,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -240,6 +239,3 @@ class SnapshotStore:
         if not paths:
             return None
         return spark.read.parquet(*paths)
-
-    def destroy(self) -> None:
-        shutil.rmtree(self.root, ignore_errors=True)

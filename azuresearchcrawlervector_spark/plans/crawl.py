@@ -90,6 +90,19 @@ ROWS_PER_UDF_TASK = 500
 # the bounded bucket-id collect can't pay for itself and a wave that
 # touches every bucket reads the table in proportion to useful work anyway
 BUCKET_PRUNE_ROWS_PER_BUCKET = 4
+# waves up to this many rows broadcast-probe the payload tables (big
+# side streamed, never shuffled). Larger waves switch to the
+# SKETCH-FILTERED fetch: a Bloom sketch of the wave's url hashes (built
+# in parallel, ~2 bytes/key) filters the payload scan on the executors,
+# then a wave-sized shuffle join resolves exactly — driver-side
+# broadcast build time would otherwise grow linearly with wave size and
+# serialize the whole crawl.
+BROADCAST_WAVE_ROWS = 100_000
+# A1 binding-cap strategy: above this K, orderBy().limit(K) (a
+# driver-side merge of up to K rows per partition) is replaced by the
+# exact range-partitioned top-K (_topk_by_priority) — driver traffic
+# drops to one count per partition
+TOPK_RANGE_ABOVE_ROWS = 50_000
 
 
 def seen_from_log(log: DataFrame | None, seen_on: SeenOn) -> DataFrame | None:
@@ -407,17 +420,20 @@ class CrawlEngine:
         return CrawlResult(self.store, m, self.cfg.seen_on_effective)
 
     # --------------------------------------------------------------- helpers
-    def _exact_topk_by_priority(self, df: DataFrame, k: int,
-                                to_unpersist: list) -> DataFrame:
-        """EXACT top-k by priority without a driver-side merge:
-        range-partition by priority (equal keys co-located, partitions
-        ordered), freeze the partitioning in a cache, count per
-        partition (tiny action), then keep whole partitions below the
-        boundary and locally top-off inside the boundary partition.
-        The only driver traffic is one count row per partition."""
+    def _topk_by_priority(self, df: DataFrame, k: int, w: _Wave) -> DataFrame:
+        """EXACT top-k rows of ``df`` by priority. Up to
+        TOPK_RANGE_ABOVE_ROWS this is orderBy().limit(k). Above it, no
+        driver-side merge: range-partition by priority (equal keys
+        co-located, partitions ordered), freeze the partitioning in a
+        cache (released with the wave), count per partition (tiny
+        action), then keep whole partitions below the boundary and
+        locally top-off inside the boundary partition. The only driver
+        traffic is one count row per partition."""
+        if k <= TOPK_RANGE_ABOVE_ROWS:
+            return df.orderBy("priority").limit(k)
         P = self.spark.sparkContext.defaultParallelism
         rp = df.repartitionByRange(P, F.col("priority").asc()).persist()
-        to_unpersist.append(rp)
+        w.unpersist.append(rp)
         cnts = sorted(
             (r["pid"], r["count"]) for r in
             rp.groupBy(F.spark_partition_id().alias("pid")).count().collect()
@@ -466,7 +482,7 @@ class CrawlEngine:
                 rows.where(F.col("image_id").isNotNull()),
                 F.xxhash64("image_id"), cfg.payload_buckets)
             images_src = prune_by_buckets(images_src, img_buckets)
-        if n <= cfg.broadcast_wave_threshold:
+        if n <= BROADCAST_WAVE_ROWS:
             img_keys = rows.select("image_id").where(
                 F.col("image_id").isNotNull()).distinct()
             # at most one decode task per core: the matched sliver is
@@ -536,7 +552,7 @@ class CrawlEngine:
         checked = (self._check_images(w, backlog, n)
                    if self.validate_images else None)
         return self._with_image_checks(
-            backlog, checked, n <= self.cfg.broadcast_wave_threshold,
+            backlog, checked, n <= BROADCAST_WAVE_ROWS,
         ).select(*EMBED_QUEUE_COLS)
 
     def _write_docs(self, w: _Wave, docs: DataFrame,
@@ -560,16 +576,12 @@ class CrawlEngine:
         image checks, so a drain wave only embeds. Same commit protocol
         as a fetch wave: data files first, manifest last; a crash re-runs
         the drain deterministically."""
-        cfg, budget = self.cfg, self.cfg.embed_budget_per_wave
+        budget = self.cfg.embed_budget_per_wave
         w = _Wave(m, i=m.iter + 1, t0=time.monotonic(),
-                  small=budget <= cfg.broadcast_wave_threshold)
+                  small=budget <= BROADCAST_WAVE_ROWS)
         try:
             backlog = self._read_embed_queue(w, m)
-            if budget > cfg.topk_range_threshold:
-                due = self._exact_topk_by_priority(backlog, budget, w.unpersist)
-            else:
-                due = backlog.orderBy("priority").limit(budget)
-            due = due.persist()
+            due = self._topk_by_priority(backlog, budget, w).persist()
             w.unpersist.append(due)
             carry = backlog.join(due.select("url_hash"), "url_hash", "left_anti")
             doc_path, queue_path, queue_n = self._write_docs(
@@ -637,7 +649,7 @@ class CrawlEngine:
         if m.pages_fetched >= self.cfg.max_pages or m.pending_count == 0:
             return self._finish(m)
         w = _Wave(m, i=m.iter + 1, t0=time.monotonic(),
-                  small=m.pending_count <= self.cfg.broadcast_wave_threshold)
+                  small=m.pending_count <= BROADCAST_WAVE_ROWS)
         phases: list[str] = []
 
         def stage(name, fn, *args):
@@ -718,17 +730,14 @@ class CrawlEngine:
         # is even in the frontier) — no global sort in steady-state BFS.
         # For a LARGE binding cap, orderBy().limit(K) is a driver-side
         # K-row merge (TakeOrderedAndProject collects up to K rows from
-        # EVERY partition) — the exact range-partitioned top-K below
-        # keeps that wave core-scalable.
+        # EVERY partition) — _topk_by_priority switches to an exact
+        # range-partitioned top-K there, which keeps that wave
+        # core-scalable.
         remaining = cfg.max_pages - w.m.pages_fetched
         if cfg.mode == CrawlMode.HEADLESS:
             due, capped = budget_due.orderBy("priority").limit(1), True
         elif remaining < pending_n:
-            if remaining > cfg.topk_range_threshold:
-                due = self._exact_topk_by_priority(
-                    budget_due, remaining, w.unpersist)
-            else:
-                due = budget_due.orderBy("priority").limit(remaining)
+            due = self._topk_by_priority(budget_due, remaining, w)
             capped = True
         else:
             due, capped = budget_due, False
@@ -747,7 +756,7 @@ class CrawlEngine:
         images tables once per wave is the anti-pattern this avoids
         (measured: broadcast-probe beats shuffle-join ~3x here, and the
         shuffle variant gets WORSE with more cores from spill pressure).
-        Above broadcast_wave_threshold rows the engine falls back to a
+        Above BROADCAST_WAVE_ROWS rows the engine falls back to a
         sketch-filtered shuffle join (AQE skew-split applies). Returns
         the persisted fetch rows with ``fetch_ok``; dead links are
         null-status rows."""
@@ -888,12 +897,7 @@ class CrawlEngine:
             emit_cand = emit_cand.select(*EMBED_QUEUE_COLS)
             if m.embed_queue_path:
                 emit_cand = self._read_embed_queue(w, m).unionByName(emit_cand)
-            if budget > cfg.topk_range_threshold:
-                due_docs = self._exact_topk_by_priority(
-                    emit_cand, budget, w.unpersist)
-            else:
-                due_docs = emit_cand.orderBy("priority").limit(budget)
-            due_docs = due_docs.persist()
+            due_docs = self._topk_by_priority(emit_cand, budget, w).persist()
             w.unpersist.append(due_docs)
             carry_docs = emit_cand.join(
                 due_docs.select("url_hash"), "url_hash", "left_anti")

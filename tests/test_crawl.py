@@ -184,14 +184,14 @@ def test_rendered_dom_headless_vs_standard(spark, tmp_ckpt):
     assert std_urls == {g.root + "/"}  # static HTML has no anchors
 
 
-def test_range_partitioned_topk_cap(spark, tmp_ckpt):
+def test_range_partitioned_topk_cap(spark, tmp_ckpt, monkeypatch):
     # A1 with a BINDING cap routed through the exact range-partitioned
     # top-K (threshold forced to 0) — must equal the simulator exactly,
     # including which pages made the cut and the visit order.
-    from dataclasses import replace
+    from azuresearchcrawlervector_spark.plans import crawl
+    monkeypatch.setattr(crawl, "TOPK_RANGE_ABOVE_ROWS", 0)
     g = website1_graph()
-    base = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD, max_pages=7)
-    cfg = replace(base, topk_range_threshold=0)
+    cfg = CrawlConfig(root_url=g.root, mode=CrawlMode.STANDARD, max_pages=7)
     assert_engine_matches_sim(spark, g, cfg, tmp_ckpt)
 
 

@@ -99,12 +99,14 @@ def test_engine_bucketed_matches_flat_broadcast_path(spark, tmp_path):
     assert flat == buck and len(flat) == 19
 
 
-def test_engine_bucketed_matches_flat_sketch_path(spark, tmp_path):
-    # broadcast_wave_threshold=0 forces the big-wave sketch-filtered
-    # fetch; bucket pruning then stacks under the Bloom row filter
+def test_engine_bucketed_matches_flat_sketch_path(spark, tmp_path,
+                                                  monkeypatch):
+    # BROADCAST_WAVE_ROWS=0 forces the big-wave sketch-filtered fetch;
+    # bucket pruning then stacks under the Bloom row filter
+    from azuresearchcrawlervector_spark.plans import crawl
+    monkeypatch.setattr(crawl, "BROADCAST_WAVE_ROWS", 0)
     g, pages, images, pages_b, images_b = _bucketed_tables(spark, tmp_path)
-    flat = _run(spark, pages, images, str(tmp_path / "c3"), g,
-                broadcast_wave_threshold=0)
+    flat = _run(spark, pages, images, str(tmp_path / "c3"), g)
     buck = _run(spark, pages_b, images_b, str(tmp_path / "c4"), g,
-                payload_buckets=B, broadcast_wave_threshold=0)
+                payload_buckets=B)
     assert flat == buck and len(flat) == 19

@@ -103,33 +103,3 @@ def test_gif_fewcolor_roundtrip_lossless(h, w, n_colors, seed, interlace):
     pal = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
     px = pal[rng.integers(0, n_colors, (h, w))]
     assert np.array_equal(gif_decode(gif_encode(px, interlace=interlace)), px)
-
-
-@given(st.lists(st.integers(-(2**17), 2**17 - 1), min_size=1, max_size=300),
-       st.integers(0, 12))
-@settings(max_examples=60, deadline=None)
-def test_flac_residual_roundtrip(vals, order):
-    from azuresearchcrawlervector_spark.core import flac
-    res = np.asarray(vals, dtype=np.int64)
-    n = len(res) + order  # blocksize = order warmups + residuals
-    w = flac._BitWriter()
-    flac._write_residual(w, res, n, order)
-    w.align()
-    got = flac._read_residual(flac._BitReader(w.getvalue()), n, order)
-    assert np.array_equal(got, res)
-
-
-@given(st.integers(1, 2000), st.integers(1, 2), st.integers(0, 2**32 - 1))
-@settings(max_examples=25, deadline=None)
-def test_flac_full_roundtrip_lossless(n, ch, seed):
-    from azuresearchcrawlervector_spark.core.flac import flac_decode, flac_encode
-    rng = np.random.default_rng(seed)
-    # mix of smooth (LPC-friendly) and noisy content
-    t = np.arange(n)
-    smooth = (3000 * np.sin(t * 0.02) + rng.integers(-50, 51, n)).astype(np.int16)
-    pcm = np.stack([smooth] * ch, axis=1)
-    if ch == 2:
-        pcm[:, 1] = rng.integers(-2**15, 2**15, n).astype(np.int16)
-    out, rate = flac_decode(flac_encode(pcm, sample_rate=8000))
-    assert rate == 8000
-    assert np.array_equal(out, pcm)
