@@ -6,16 +6,21 @@ Layout
 ------
 core/       pure-Python kernels (no Spark imports) shared by the vectorized
             pandas UDFs and the golden-oracle simulator: URL canonicalization,
-            xxhash64, HTML link/text extraction, PNG + fake-lossy codecs,
-            deterministic pseudo-embeddings.
-functions/  Arrow/pandas UDF wrappers + built-in-function compositions.
-operators/  seen-sketch (Bloom), politeness scheduler, dedup family,
-            similarity search.
+            xxhash64, HTML link/text extraction, the PNG/JPEG/GIF/BMP image
+            codecs, deterministic pseudo-embeddings, console output.
+functions/  Arrow/pandas UDF wrappers + built-in-function compositions
+            (urls, html, embeddings, image validation, text analysis).
+operators/  seen-sketch (sharded Bloom), politeness scheduler, dedup family,
+            similarity search, PQ, BM25 search, HLL/Count-Min sketches,
+            graph ranking, LM quality, curation, contamination, packing,
+            recrawl, sampling, sessions, anchor text.
 sources/    synthetic fixture generator (pages/images/robots/sitemaps),
-            sitemap/robots parsing.
+            payload tables, sitemap/robots parsing.
 plans/      the iterative frontier engine (BFS / DFS / sitemap traversal
             policies) + snapshot checkpointing.
 streaming/  Structured Streaming variant of the page-processing stage.
+cli.py, config.py, session.py, simulator.py
+            command line, crawl config, Spark session, golden oracle.
 
 Design stance (SURVEY.md §7.0): ONE engine, three traversal policies
 expressed as priority keys over an explicit frontier table — not three

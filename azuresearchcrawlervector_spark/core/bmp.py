@@ -9,8 +9,7 @@ Scope (all REAL):
   encoder (lossless when ≤256 distinct colors).
 
 One of the still-image formats the repo carries from scratch (PNG,
-JPEG, GIF, BMP); like GIF it is part of the beyond-reference
-multimodal family.
+JPEG, GIF, BMP); like GIF, no crawl path produces it.
 """
 from __future__ import annotations
 

@@ -12,9 +12,8 @@ Scope (all REAL, no codec library):
   nearest-color assignment — LOSSY but byte-reproducible, measuring
   40-44 dB on the synthetic fixture images (the jpeg PSNR gate).
 - per-frame random access (`gif_frame`): frames are independently
-  LZW-coded (intra-only, like MJPEG), so sampling frame k walks the
-  block structure O(total bytes) but only DECOMPRESSES frame k —
-  the property `sample_frames` relies on for every container here.
+  LZW-coded (intra-only), so reading frame k walks the block
+  structure O(total bytes) but only DECOMPRESSES frame k.
 
 Not carried (documented): transparency compositing and partial-frame
 disposal — every frame is treated as a full-canvas replacement, which
@@ -285,7 +284,7 @@ def gif_encode_anim(frames: list[np.ndarray], delay_cs: int = 10,
     """Frames (each HxWx3 uint8, same shape) → animated GIF89a with a
     NETSCAPE2.0 loop block and per-frame graphic control extensions.
     Every frame is a FULL-canvas image (disposal 1) and independently
-    LZW-coded → intra-only random access for gif_frame/sample_frames.
+    LZW-coded → intra-only random access for gif_frame.
 
     A single shared palette is used either way: exact when the union
     of all frames' colors fits 256, else one median-cut palette over

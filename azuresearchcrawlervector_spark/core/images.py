@@ -170,76 +170,6 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
-def sniff_image(data: bytes) -> dict:
-    """Header-only metadata — fmt, dimensions, bit depth, channels —
-    from the first bytes of an image payload, WITHOUT decoding pixel
-    data. The at-scale pre-filter: validating (fmt, w, h) against a
-    catalog costs O(header) per row (<100 bytes for PNG/GIF, ~1 KB of
-    marker segments for JPEG) vs a full entropy decode, so corrupt or
-    mislabeled rows are dropped before the expensive stage.
-
-    Recognizes the formats decode() accepts — PNG (IHDR), baseline
-    JPEG (marker walk to SOF0/1/2), GIF87a/89a, BMP (DIB header) and
-    QPNG (sniffs the inner PNG). Raises ValueError on anything else
-    (TIFF, WebP, …) or on truncated headers.
-    """
-    data = bytes(data)
-    if data[:4] == b"QPNG":
-        inner = sniff_image(data[4:])
-        return {**inner, "fmt": "qpng"}
-    if data[:8] == _PNG_SIG:
-        if len(data) < 29 or data[12:16] != b"IHDR":
-            raise ValueError("png: truncated IHDR")
-        w, h, depth, ctype = struct.unpack(">IIBB", data[16:26])
-        channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(ctype)
-        if channels is None:
-            raise ValueError(f"png: bad color type {ctype}")
-        return {"fmt": "png", "w": w, "h": h, "bit_depth": depth,
-                "channels": channels}
-    if data[:6] in (b"GIF87a", b"GIF89a"):
-        if len(data) < 13:
-            raise ValueError("gif: truncated header")
-        w, h = struct.unpack("<HH", data[6:10])
-        return {"fmt": "gif", "w": w, "h": h, "bit_depth": 8,
-                "channels": 3}
-    if data[:2] == b"BM" and len(data) >= 54:
-        from .bmp import bmp_parse
-        m = bmp_parse(data)
-        return {"fmt": "bmp", "w": m["w"], "h": m["h"],
-                "bit_depth": min(m["bpp"], 8),
-                "channels": 3 if m["bpp"] == 24 else 1}
-    if data[:2] == b"\xff\xd8":
-        # walk marker segments to the frame header (SOF0/1/2); spec
-        # allows 0xFF fill bytes between segments and length-less
-        # standalone markers (TEM, RSTn)
-        pos = 2
-        while pos + 4 <= len(data):
-            if data[pos] != 0xFF:
-                raise ValueError("jpeg: bad marker sync")
-            marker = data[pos + 1]
-            if marker == 0xFF:       # fill byte — marker continues
-                pos += 1
-                continue
-            if marker in (0xC0, 0xC1, 0xC2):
-                if pos + 10 > len(data):
-                    raise ValueError("jpeg: truncated SOF")
-                depth, h, w, ncomp = struct.unpack(
-                    ">BHHB", data[pos + 4 : pos + 10])
-                return {"fmt": "jpeg", "w": w, "h": h,
-                        "bit_depth": depth, "channels": ncomp}
-            if marker == 0xD9 or marker == 0xDA:
-                break  # EOI / entropy stream before any SOF
-            if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-                pos += 2             # standalone marker, no length
-                continue
-            (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-            if seglen < 2:
-                raise ValueError("jpeg: bad segment length")
-            pos += 2 + seglen
-        raise ValueError("jpeg: no frame header found")
-    raise ValueError("unrecognized image container")
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB; inf for identical images."""
     mse = np.mean((a.astype(np.float64) - b.astype(np.float64)) ** 2)

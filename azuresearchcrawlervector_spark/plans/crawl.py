@@ -860,7 +860,7 @@ class CrawlEngine:
         yields them; None = not validated), the P3 embed budget split,
         embedding, then the documents write and the embed-queue rewrite.
         Returns _write_docs' (doc_path, queue_path, queue_n)."""
-        spark, cfg, m = self.spark, self.cfg, w.m
+        cfg, m = self.cfg, w.m
         # visit order (oracle contract): seq = emitted_so_far + rank(priority),
         # computed WITHOUT a global single-partition sort: the wave is
         # already range-partitioned by priority (cached, so partition
@@ -1029,7 +1029,7 @@ class CrawlEngine:
         then commit the manifest. Returns None when nothing was due (the
         caller finishes the crawl without referencing this wave's
         files)."""
-        spark, cfg, m, i = self.spark, self.cfg, w.m, w.i
+        cfg, m, i = self.cfg, w.m, w.i
         frontier_log = (
             fetch.select(
                 "url", "url_hash", "host", "depth", "priority", "parent_url",

@@ -68,9 +68,7 @@ def test_parse_and_guards():
 
 def test_images_dispatch_and_sniff():
     from azuresearchcrawlervector_spark.core.images import (
-        decode, encode, sniff_image)
+        decode, encode)
     px = generate_pixels("bmp-disp", 32, 24)
     data = encode(px, "bmp")
     assert np.array_equal(decode(data, "bmp"), px)
-    m = sniff_image(data)
-    assert (m["fmt"], m["w"], m["h"]) == ("bmp", 32, 24)

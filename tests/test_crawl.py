@@ -8,7 +8,6 @@ simulator (FIXTURES.md §6 table-diff oracle replacing log-scraping).
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from azuresearchcrawlervector_spark.config import CrawlConfig, CrawlMode
@@ -19,9 +18,7 @@ from azuresearchcrawlervector_spark.sources.fixtures import (
     test_website as website1_graph,
     test_website2 as website2_graph,
 )
-from azuresearchcrawlervector_spark.sources.synthetic import (
-    images_df, pages_df, robots_df,
-)
+from azuresearchcrawlervector_spark.sources.synthetic import pages_df
 
 
 def run_engine(spark, graph, cfg, ckpt, **kw):

@@ -1,4 +1,4 @@
-"""Dedup family + similarity search + text analysis + multimodal plumbing."""
+"""Dedup family + similarity search + text analysis."""
 
 import numpy as np
 import pytest
@@ -11,14 +11,9 @@ from azuresearchcrawlervector_spark.operators.dedup import (
     embedding_neardup_pairs, exact_dedup, minhash_lsh_pairs,
     minhash_signatures, ngram_jaccard_pairs, simhash64, simhash_pairs,
 )
-from azuresearchcrawlervector_spark.operators.multimodal import (
-    image_features, resize_images, sample_frames,
-)
 from azuresearchcrawlervector_spark.operators.similarity import (
     ann_topk_lsh, topk_cosine,
 )
-from azuresearchcrawlervector_spark.sources.fixtures import test_website as website1_graph
-from azuresearchcrawlervector_spark.sources.synthetic import images_df
 
 SF = "/root/testdata/sf0.001"
 
@@ -282,26 +277,6 @@ def test_text_columns(spark, docs):
     assert all(0.0 <= r["quality"] <= 1.0 for r in out)
     assert all(r["lang_pred"] in ("en", "de", "fr", "es", "und") for r in out)
     assert len({r["fp"] for r in out}) == len(out)  # no dups in this table
-
-
-# ------------------------------------------------------------- multimodal
-def test_resize_and_features(spark):
-    g = website1_graph()
-    imgs = images_df(spark, g, w=32, h=24)
-    rs = resize_images(imgs, 8, 6).collect()
-    assert all(len(r["pixels"]) == 8 * 6 * 3 for r in rs)
-    feats = image_features(imgs, grid=4).collect()
-    assert all(len(r["feature"]) == 16 for r in feats)
-    assert all(0.0 <= v <= 1.0 for r in feats for v in r["feature"])
-
-
-def test_frame_sample_stub(spark):
-    df = spark.createDataFrame(
-        [("m1", bytearray(b"0123456789" * 20))], "media_id string, bytes binary")
-    with pytest.raises(Exception):
-        sample_frames(df, allow_fake=False).collect()  # stub: raises without fake
-    rows = sample_frames(df, allow_fake=True, n_frames=3).collect()
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2]
 
 
 def test_hamming_pairs_over_image_phash(spark):

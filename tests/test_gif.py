@@ -117,21 +117,6 @@ def test_images_dispatch():
     assert psnr(px, out) >= 40.0
 
 
-def test_sample_frames_gif(spark):
-    from azuresearchcrawlervector_spark.core.images import png_decode
-    from azuresearchcrawlervector_spark.operators.multimodal import (
-        sample_frames)
-    frames = [_few_color(24, 32, 8, seed=s) for s in range(12)]
-    data = gif.gif_encode_anim(frames)
-    df = spark.createDataFrame(
-        [("g1", bytearray(data), "gif")], "media_id string, bytes binary, fmt string")
-    got = {r["frame_idx"]: bytes(r["frame"])
-           for r in sample_frames(df, every_n=5, n_frames=3).collect()}
-    assert sorted(got) == [0, 5, 10]
-    for fi, png in got.items():
-        assert np.array_equal(png_decode(png), frames[fi])
-
-
 def test_truncated_image_descriptor_raises_valueerror():
     px = _few_color(16, 16, 4)
     data = gif.gif_encode(px)
