@@ -6,8 +6,8 @@ Layout
 ------
 core/       pure-Python kernels (no Spark imports) shared by the vectorized
             pandas UDFs and the golden-oracle simulator: URL canonicalization,
-            xxhash64, HTML link/text extraction, the PNG/JPEG/GIF/BMP image
-            codecs, deterministic pseudo-embeddings, console output.
+            xxhash64, HTML link/text extraction, the PNG/JPEG image codecs,
+            deterministic pseudo-embeddings, console output.
 functions/  Arrow/pandas UDF wrappers + built-in-function compositions
             (urls, html, embeddings, image validation, text analysis).
 operators/  seen-sketch (sharded Bloom), politeness scheduler, dedup family,
@@ -18,7 +18,6 @@ sources/    synthetic fixture generator (pages/images/robots/sitemaps),
             payload tables, sitemap/robots parsing.
 plans/      the iterative frontier engine (BFS / DFS / sitemap traversal
             policies) + snapshot checkpointing.
-streaming/  Structured Streaming variant of the page-processing stage.
 cli.py, config.py, session.py, simulator.py
             command line, crawl config, Spark session, golden oracle.
 

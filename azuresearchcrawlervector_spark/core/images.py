@@ -10,14 +10,14 @@ The container has no PIL/libjpeg, so:
   lossy-DCT artifacts. Decode sniffs the legacy ``QPNG`` magic for
   artifacts written by earlier builds.
 - ``qpng``: a deterministic cheap LOSSY codec (pixels quantized to step
-  4 then PNG-encoded) retained as the HIGH-THROUGHPUT stand-in for the
-  120k-row bench — the pure-Python JPEG Huffman layer is ~ms/image; a
-  production deployment swaps core/jpeg.py for libjpeg-turbo with no
-  Spark-side changes (functions/imagefn.py is codec-agnostic).
+  4 then PNG-encoded). No fixture or bench row produces it any more (the
+  bench's lossy half is real JPEG); it stays as the legacy format that
+  ``decode(..., "jpeg")`` reads from earlier builds. A production
+  deployment swaps core/jpeg.py for libjpeg-turbo with no Spark-side
+  changes (functions/imagefn.py is codec-agnostic).
 
-encode/decode also accept ``gif`` (core/gif.py) and ``bmp``
-(core/bmp.py), which no crawl path produces. Any other ``fmt`` raises
-ValueError, which the image-validation UDF records as img_ok=false.
+Any other ``fmt`` (TIFF, GIF, BMP, ...) raises ValueError, which the
+image-validation UDF records as img_ok=false.
 
 Also here: PSNR and an 8x8 average perceptual hash (phash) used for the
 per-row fetch invariant, and the deterministic pixel generator that
@@ -137,14 +137,6 @@ def encode(pixels: np.ndarray, fmt: str) -> bytes:
         return jpeg_encode(pixels, quality=97)
     if fmt == "qpng":
         return qpng_encode(pixels)
-    if fmt == "gif":
-        from .gif import gif_encode
-        # lossless when <=256 distinct colors, else deterministic
-        # median-cut quantization — lossy, PSNR-gated like jpeg
-        return gif_encode(pixels)
-    if fmt == "bmp":
-        from .bmp import bmp_encode
-        return bmp_encode(pixels)   # lossless (24-bit BI_RGB)
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
@@ -161,12 +153,6 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
         return jpeg_decode(data)
     if fmt == "qpng":
         return qpng_decode(data)
-    if fmt == "gif":
-        from .gif import gif_decode
-        return gif_decode(data)
-    if fmt == "bmp":
-        from .bmp import bmp_decode
-        return bmp_decode(data)
     raise ValueError(f"unknown fmt {fmt!r}")
 
 

@@ -12,14 +12,6 @@ from pyspark.sql.types import ArrayType, FloatType
 from ..core.embed import DEFAULT_DIM, pseudo_embed
 
 
-def make_embed_udf(dim: int = DEFAULT_DIM):
-    @F.pandas_udf(ArrayType(FloatType(), containsNull=False))
-    def embed_udf(text: pd.Series) -> pd.Series:
-        return pd.Series([pseudo_embed(t, dim).tolist() for t in text])
-
-    return embed_udf
-
-
 def make_dual_embed_udf(dim: int = DEFAULT_DIM):
     """(title, content) → struct(title_vector, content_vector) in ONE
     Arrow pass — the reference embeds both per page

@@ -2,8 +2,8 @@
 (BASELINE.json input_hint: (image_id, bytes, w, h, fmt, caption, phash)).
 
 Decode + per-row invariant check run in ONE Arrow batch pass:
-- decode `bytes` per `fmt` (png lossless / qpng deterministic-lossy —
-  see core/images.py stub disclosure),
+- decode `bytes` per `fmt` (png lossless / jpeg lossy — see
+  core/images.py),
 - recompute the reference pixels from image_id (deterministic generator)
   and measure PSNR: the `input_hint` invariant is PSNR ≥ 40 dB for lossy
   formats, exact for lossless,

@@ -85,25 +85,3 @@ def cms_heavy_hitters(df: DataFrame, value_col: str, threshold: int,
     return (cms_estimate(sketch, items, value_col, depth, width)
             .filter(F.col("est") >= threshold))
 
-
-# Pure-python counter math, shared by the STREAMING operator
-# (streaming/stream.with_streaming_cms) and by tests — identical hash
-# and estimate semantics to the DataFrame pipeline above.
-
-def bucket_py(value, j: int, width: int = 1024) -> int:
-    import hashlib
-    h = int(hashlib.md5(f"{j}:{value}".encode()).hexdigest()[:15], 16)
-    return h % width
-
-
-def counters_update(counters, value, depth: int = 4,
-                    width: int = 1024) -> None:
-    """Fold one occurrence into a depth×width int array (flat,
-    row-major) in place."""
-    for j in range(depth):
-        counters[j * width + bucket_py(value, j, width)] += 1
-
-
-def estimate_py(counters, value, depth: int = 4, width: int = 1024) -> int:
-    return min(counters[j * width + bucket_py(value, j, width)]
-               for j in range(depth))

@@ -90,7 +90,10 @@ def hll_estimate(regs: DataFrame,
         regs.groupBy(*gs)
         .agg(
             F.count("*").alias("_nz"),
-            F.sum(F.expr(f"shiftleft(1L, {w + 1} - _rho)")).alias("_zs"),
+            # an empty register table sums to 0, not NULL: the
+            # estimate of no values is 0
+            F.coalesce(F.sum(F.expr(f"shiftleft(1L, {w + 1} - _rho)")),
+                       F.lit(0)).alias("_zs"),
         )
         .withColumn("_z",
                     F.col("_zs") + (F.lit(p) - F.col("_nz")) * F.lit(scale))
@@ -117,36 +120,3 @@ def hll_distinct(
     return hll_estimate(
         hll_registers(df, value_col, group_cols, b), group_cols, b)
 
-
-# Pure-python register math, shared by the STREAMING operator
-# (streaming/stream.with_streaming_hll keeps one 2^b-byte register
-# array per group in state) and by tests. Bit-identical to the
-# DataFrame pipeline above: same md5-60 hash, same exact-int harmonic
-# sum, same literal shapes in the float tail.
-
-def register_update(regs: bytearray, value, b: int = 8) -> None:
-    """Fold one value into a 2^b-byte register array in place."""
-    import hashlib
-    w = 60 - b
-    h = int(hashlib.md5(str(value).encode()).hexdigest()[:15], 16)
-    idx = h >> w
-    suffix = h & ((1 << w) - 1)
-    rho = (w + 1) if suffix == 0 else (w + 1 - suffix.bit_length())
-    if rho > regs[idx]:
-        regs[idx] = rho
-
-
-def estimate_from_registers(regs, b: int = 8) -> float:
-    """The estimate of hll_estimate() from a raw register array
-    (0 = empty register), rounded to 4 — bit-identical math."""
-    import math
-    p = 1 << b
-    w = 60 - b
-    scale = 1 << (w + 1)
-    z = sum((1 << (w + 1 - m)) if m else scale for m in regs)
-    alpha = _alpha(p)
-    raw = alpha * float(p) * float(p) * float(scale) / z
-    zeros = sum(1 for m in regs if m == 0)
-    if raw <= 2.5 * p and zeros > 0:
-        return round(float(p) * math.log(float(p) / zeros), 4)
-    return round(raw, 4)

@@ -74,38 +74,3 @@ def test_estimate_absent_item_is_zero(spark):
     # an uncounted item reads its (likely untouched) counters: with 10
     # distinct values over 4x1024 cells the min is 0, never a dropped row
     assert got["never-counted-item-xyz"] == 0
-
-
-def test_streaming_cms_alerts_match_batch(spark, tmp_path):
-    # heavy-hitter alarm across micro-batches: final estimates equal
-    # the batch operator over the union; the hot value alerts only
-    # once its cumulative estimate crosses the threshold
-    from azuresearchcrawlervector_spark.streaming.stream import (
-        with_streaming_cms,
-    )
-
-    batch1 = [("h1", "hot")] * 60 + [("h1", f"cold{i}") for i in range(30)]
-    batch2 = [("h1", "hot")] * 60 + [("h2", "other")] * 10
-    schema = "host string, url string"
-    inp = str(tmp_path / "cms_in")
-    spark.createDataFrame(batch1, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    spark.createDataFrame(batch2, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-    out = str(tmp_path / "cms_out")
-    q = (with_streaming_cms(stream, "url", "host", threshold=100)
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "cms_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    emitted = spark.read.parquet(out).collect()
-    # only 'hot' ever reaches 100, and only once batch 2 lands
-    assert {(r["host"], r["value"]) for r in emitted} == {("h1", "hot")}
-    assert max(r["est"] for r in emitted) == 120
-    # cross-check vs the batch sketch over the union
-    whole = spark.createDataFrame(batch1 + batch2, schema).filter("host = 'h1'")
-    batch_est = {r["value"]: r["est"] for r in
-                 cms_heavy_hitters(whole, "url", threshold=100).collect()}
-    assert batch_est == {"hot": 120}

@@ -1,6 +1,8 @@
 """The docs name only package modules that exist: every module path
 written in backticks in README.md, COVERAGE.md and crawlbench/COVERAGE.md
-resolves to a file under azuresearchcrawlervector_spark/."""
+resolves to a file under azuresearchcrawlervector_spark/, and every
+``path.py::name`` there names a symbol defined in that file."""
+import ast
 import re
 from pathlib import Path
 
@@ -66,4 +68,49 @@ def test_docs_name_only_existing_modules():
     assert len(found) > 20          # the scan sees the docs' module paths
     missing = sorted({f"{doc}: {path}" for doc, path, rel in found
                       if not (PKG / rel).is_file()})
+    assert not missing, "\n".join(missing)
+
+
+# ``path.py::name`` or ``path.py::Class.method`` inside a backtick span;
+# a bare ``::name`` continuation (no path before it) does not match
+SYMBOL = re.compile(r"((?:[\w-]+/)*\w+\.py)::(\w+(?:\.\w+)?)")
+
+
+def _defined_names(path: Path) -> set[str]:
+    """Top-level defs, classes and assigned names, each class's methods
+    by bare name, and ``Class.method``."""
+    names = set()
+    for node in ast.parse(path.read_text(), str(path)).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            names.add(node.name)
+        elif isinstance(node, ast.ClassDef):
+            names.add(node.name)
+            for item in node.body:
+                if isinstance(item, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    names |= {item.name, f"{node.name}.{item.name}"}
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return names
+
+
+def _doc_symbols():
+    for doc in DOCS:
+        text = (REPO / doc).read_text()
+        for span in re.findall(r"`([^`\n]+)`", text):
+            for path, name in SYMBOL.findall(span):
+                rel = _package_path(path)
+                yield doc, path, name, PKG / rel if rel else REPO / path
+
+
+def test_docs_name_only_existing_symbols():
+    assert SYMBOL.findall("acs/plans/crawl.py::CrawlEngine._wave") == [
+        ("acs/plans/crawl.py", "CrawlEngine._wave")]
+    assert SYMBOL.findall("tests/test_crawl.py::test_x[sketch]") == [
+        ("tests/test_crawl.py", "test_x")]
+    assert SYMBOL.findall("::test_continuation") == []
+    found = list(_doc_symbols())
+    assert len(found) > 20          # the scan sees the docs' symbol refs
+    missing = sorted({f"{doc}: {path}::{name}" for doc, path, name, file in found
+                      if not file.is_file() or name not in _defined_names(file)})
     assert not missing, "\n".join(missing)

@@ -82,47 +82,6 @@ def test_hll_shuffles_at_most_p_rows_per_group(spark):
     assert "partial_max" in plan or "HashAggregate" in plan
 
 
-def test_streaming_hll_matches_batch(spark, tmp_path):
-    # per-host streaming HLL across micro-batches: the LAST emitted
-    # estimate per host is bit-identical to the batch operator over
-    # the union of all batches
-    from azuresearchcrawlervector_spark.streaming.stream import (
-        with_streaming_hll,
-    )
-
-    rows1 = [(f"h{i % 3}", f"u{i}") for i in range(600)]
-    rows2 = [(f"h{i % 3}", f"u{i}") for i in range(300, 900)]  # overlap
-    schema = "host string, url string"
-    inp = str(tmp_path / "hll_in")
-    spark.createDataFrame(rows1, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    spark.createDataFrame(rows2, schema).coalesce(1) \
-        .write.mode("append").parquet(inp)
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1).parquet(inp))
-    out = str(tmp_path / "hll_out")
-    q = (with_streaming_hll(stream, "url", "host")
-         .writeStream.format("parquet").option("path", out)
-         .option("checkpointLocation", str(tmp_path / "hll_ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    emitted = spark.read.parquet(out).collect()
-    assert len(emitted) >= 3            # >= one row per host
-    final = {}
-    for r in emitted:                   # highest n_rows = latest
-        cur = final.get(r["host"])
-        if cur is None or r["n_rows"] > cur[0]:
-            final[r["host"]] = (r["n_rows"], r["est"])
-    batch = {r["host"]: r["est"] for r in
-             hll_distinct(
-                 spark.createDataFrame(rows1 + rows2, schema),
-                 "url", ("host",)).collect()}
-    assert {h: e for h, (_n, e) in final.items()} == batch
-    # 900 distinct urls over 3 hosts -> ~300 each
-    for _h, (_n, e) in final.items():
-        assert abs(e - 300) / 300 < 0.2
-
-
 def test_hll_null_values_are_no_value(spark):
     df = spark.createDataFrame(
         [(f"u{i}",) for i in range(100)] + [(None,)] * 5, "u string")

@@ -67,22 +67,34 @@ def test_decode_validate_udf(spark):
 
 
 def test_corrupt_bytes_flagged_not_crashing(spark):
-    # img-tiff is a well-formed uncompressed 1x1 baseline TIFF whose one
-    # pixel is exactly generate_pixels("img-tiff", 1, 1): tiff is not a
-    # payload format, so it is flagged without a decode, like garbage
+    # img-tiff, img-gif and img-bmp are well-formed 1x1 files whose one
+    # pixel is exactly generate_pixels(image_id, 1, 1): none of them is
+    # a payload format, so each is flagged without a decode, like garbage
     ifd = [(256, 4, 1, 1), (257, 4, 1, 1), (258, 3, 3, 12), (259, 3, 1, 1),
            (262, 3, 1, 2), (273, 4, 1, 8), (277, 3, 1, 3), (278, 4, 1, 64),
            (279, 4, 1, 3)]
     tiff = (b"II*\x00" + struct.pack("<I", 18) + b"\xb9\xbe\xb8\x00"
             + struct.pack("<3HH", 8, 8, 8, len(ifd))
             + b"".join(struct.pack("<HHII", *e) for e in ifd) + bytes(4))
+    # GIF89a: 2-entry global palette, one LZW-coded index-0 pixel
+    gif = (b"GIF89a" + struct.pack("<HHBBB", 1, 1, 0xF0, 0, 0)
+           + bytes([139, 189, 202]) + bytes(3)
+           + b"," + struct.pack("<4HB", 0, 0, 1, 1, 0)
+           + b"\x02\x02\x44\x01\x00;")
+    # 24-bit BI_RGB: one BGR pixel padded to a 4-byte row
+    bmp = (b"BM" + struct.pack("<IHHI", 58, 0, 0, 54)
+           + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 2835, 2835,
+                         0, 0)
+           + bytes([214, 208, 156, 0]))
     df = spark.createDataFrame(
         [("img-bad", bytearray(b"garbage"), "png"),
-         ("img-tiff", bytearray(tiff), "tiff")],
+         ("img-tiff", bytearray(tiff), "tiff"),
+         ("img-gif", bytearray(gif), "gif"),
+         ("img-bmp", bytearray(bmp), "bmp")],
         "image_id string, bytes binary, fmt string",
     )
     rows = {r["image_id"]: r for r in with_image_validation(df).collect()}
-    for iid in ("img-bad", "img-tiff"):
+    for iid in ("img-bad", "img-tiff", "img-gif", "img-bmp"):
         assert rows[iid]["img_ok"] is False
         assert rows[iid]["psnr_db"] is None
 

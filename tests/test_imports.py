@@ -15,9 +15,6 @@ REPO = ROOT.parent
 ENTRY_POINTS = [ROOT / "cli.py", REPO / "__spark_entry__.py",
                 REPO / "bench.py", *sorted((REPO / "crawlbench").glob("*.py")),
                 *sorted((REPO / "tools").glob("*.py"))]
-# Reached by no entry point but kept until the reference rows it carries
-# (COVERAGE.md S8, S9 and A5) move onto the batch store or a declared query.
-PENDING_DELETION = {"streaming/stream.py"}
 
 
 def _module_name(path: Path) -> str:
@@ -70,8 +67,8 @@ def test_every_package_import_resolves():
 
 def test_every_package_module_is_reached():
     """The AST import closure of the entry points (cli, the driver
-    contract, bench, crawlbench and tools) covers every package module
-    but PENDING_DELETION; package __init__s count as reached."""
+    contract, bench, crawlbench and tools) covers every package module;
+    package __init__s count as reached."""
     by_name = {_module_name(p): p for p in ROOT.rglob("*.py")}
     todo = list(ENTRY_POINTS)
     reached = {*todo, *(p for p in by_name.values() if p.name == "__init__.py")}
@@ -85,4 +82,4 @@ def test_every_package_module_is_reached():
                     todo.append(dep)
     unreached = {p.relative_to(ROOT).as_posix()
                  for p in set(by_name.values()) - reached}
-    assert unreached == PENDING_DELETION
+    assert not unreached, "\n".join(sorted(unreached))

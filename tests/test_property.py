@@ -92,14 +92,3 @@ def test_bloom_never_false_negative(keys):
     bf.add_many(arr)
     assert bf.contains_many(arr).all()
 
-
-# ------------------------------------------------------- GIF properties
-@given(st.integers(1, 24), st.integers(1, 24), st.integers(1, 8),
-       st.integers(0, 2**32 - 1), st.booleans())
-@settings(max_examples=40, deadline=None)
-def test_gif_fewcolor_roundtrip_lossless(h, w, n_colors, seed, interlace):
-    from azuresearchcrawlervector_spark.core.gif import gif_decode, gif_encode
-    rng = np.random.default_rng(seed)
-    pal = rng.integers(0, 256, (n_colors, 3), dtype=np.uint8)
-    px = pal[rng.integers(0, n_colors, (h, w))]
-    assert np.array_equal(gif_decode(gif_encode(px, interlace=interlace)), px)
