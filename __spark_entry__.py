@@ -273,7 +273,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def q_simhash(spark, sf):
         # md5_60 token hash — exactly reproducible in DuckDB (oracle
-        # twin below); the xxh64 fast path is exercised by simhash_pairs
+        # twin below); the xxhash64 fast path is exercised by simhash_pairs
         # in tests/bench.
         d = spark.read.parquet(_t(sf, "documents"))
         return simhash64(d, token_hash="md5_60").orderBy("doc_id")
@@ -336,8 +336,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         q = [float(x) for x in qvec]
         path = tempfile.mkdtemp(prefix="acs_ivfpart_") + "/emb"
         write_ivf_partitioned(em, path, n_centroids=16)
-        return ann_topk_ivf_partitioned(spark, path, q, k=10,
-                                        n_centroids=16, nprobe=4)
+        return ann_topk_ivf_partitioned(spark, path, q, k=10, nprobe=4)
 
     def q_crawl_flagship(spark, sf):
         return entry(spark).select("seq", "url", "depth", "id", "title")

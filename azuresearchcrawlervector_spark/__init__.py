@@ -6,7 +6,7 @@ Layout
 ------
 core/       pure-Python kernels (no Spark imports) shared by the vectorized
             pandas UDFs and the golden-oracle simulator: URL canonicalization,
-            xxhash64, HTML link/text extraction, the PNG/JPEG image codecs,
+            HTML link/text extraction, the PNG/JPEG image codecs,
             deterministic pseudo-embeddings, console output.
 functions/  Arrow/pandas UDF wrappers + built-in-function compositions
             (urls, html, embeddings, image validation, text analysis).

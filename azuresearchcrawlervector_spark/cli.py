@@ -18,10 +18,9 @@ validation failures, CrawlerMain.cs:211-223).
 from __future__ import annotations
 
 import argparse
-import sys
 
 from .config import (
-    DEFAULT_MAX_DEPTH, DEFAULT_MAX_PAGES, CrawlConfig, CrawlMode, SeenOn,
+    DEFAULT_MAX_DEPTH, DEFAULT_MAX_PAGES, CrawlConfig, CrawlMode,
 )
 from .core.urls import canonicalize
 
@@ -70,6 +69,13 @@ def main(argv: list[str] | None = None, console=None) -> int:
         return 2
     if args.maxPages <= 0 or args.maxDepth < 0:
         console.write_error("error: maxPages must be > 0 and maxDepth >= 0")
+        return 2
+    if args.crawlMode == CrawlMode.SITEMAP.value:
+        # the engine alone would run a link-following crawl; sitemap
+        # mode needs the sitemap documents (plans/crawl.run_sitemap_crawl)
+        console.write_error(
+            "error: --crawlMode sitemap needs sitemap documents, which the "
+            "CLI does not take")
         return 2
 
     from .plans.crawl import CrawlEngine, run_sites

@@ -68,22 +68,10 @@ class CrawlConfig:
     # probed shard-aligned from the checkpoint store. A sketch of up to
     # 16 MB is one shard; 10^10 keys × 16 bits make 2048.
     seen_sketch_shard_bits: int = 1 << 27
-    # enforce robots.txt Disallow prefixes on discovered links — opt-in;
-    # the reference never enforces them (Abot's respect-robots flag
-    # defaults off, sitemap/headless crawlers ignore robots rules)
-    respect_robots_disallow: bool = False
     # P5 crawl timeout: None = reference formula maxPages x 10 s
     # (AbotCrawler.cs:165) with a 600 s floor so tiny-budget crawls on a
     # loaded machine aren't killed mid-wave
     crawl_timeout_s: int | None = None
-    # P3 — the reference's GLOBAL RateLimiter (≥4 s between embedding
-    # calls, RateLimiter.cs:17-35) as a per-wave batch budget: at most
-    # this many documents are embedded+emitted per wave, the rest defer
-    # (by priority) to an embed queue that drains in later waves. None
-    # (default) = unlimited, the faithful behavior for the synthetic
-    # embedder; the cap is implemented with the range-partitioned exact
-    # top-K (no global unpartitioned Window).
-    embed_budget_per_wave: int | None = None
     # payload-table bucket layout (sources/payload.py): >0 means the
     # pages/images tables carry a `bucket` partition column equal to
     # pmod(xxhash64(url|image_id), payload_buckets); each wave's fetch

@@ -7,14 +7,9 @@ The container has no PIL/libjpeg, so:
 - ``jpeg``: a REAL baseline JFIF codec (core/jpeg.py — sequential DCT,
   standard Annex K quant/Huffman tables, 4:4:4). The fixture/flagship
   paths use it, so the PSNR ≥ 40 dB invariant runs against genuine
-  lossy-DCT artifacts. Decode sniffs the legacy ``QPNG`` magic for
-  artifacts written by earlier builds.
-- ``qpng``: a deterministic cheap LOSSY codec (pixels quantized to step
-  4 then PNG-encoded). No fixture or bench row produces it any more (the
-  bench's lossy half is real JPEG); it stays as the legacy format that
-  ``decode(..., "jpeg")`` reads from earlier builds. A production
-  deployment swaps core/jpeg.py for libjpeg-turbo with no Spark-side
-  changes (functions/imagefn.py is codec-agnostic).
+  lossy-DCT artifacts. A production deployment swaps core/jpeg.py for
+  libjpeg-turbo with no Spark-side changes (functions/imagefn.py is
+  codec-agnostic).
 
 Any other ``fmt`` (TIFF, GIF, BMP, ...) raises ValueError, which the
 image-validation UDF records as img_ok=false.
@@ -32,7 +27,6 @@ import zlib
 import numpy as np
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
-QUANT_STEP = 4  # qpng quantization step (drops 2 LSBs)
 
 
 def _chunk(tag: bytes, payload: bytes) -> bytes:
@@ -113,18 +107,6 @@ def png_decode(data: bytes) -> np.ndarray:
     return out.reshape(h, w, 3)
 
 
-def qpng_encode(pixels: np.ndarray) -> bytes:
-    """Deterministic lossy codec: quantize to step 4, then PNG-encode."""
-    q = (pixels.astype(np.int32) // QUANT_STEP * QUANT_STEP).astype(np.uint8)
-    return b"QPNG" + png_encode(q)
-
-
-def qpng_decode(data: bytes) -> np.ndarray:
-    if data[:4] != b"QPNG":
-        raise ValueError("not a QPNG")
-    return png_decode(data[4:])
-
-
 def encode(pixels: np.ndarray, fmt: str) -> bytes:
     if fmt == "png":
         return png_encode(pixels)
@@ -135,8 +117,6 @@ def encode(pixels: np.ndarray, fmt: str) -> bytes:
         # PSNR ≥ 40 for lossy formats, so the quality must clear it
         # with the loss still being real (quality 90 measures ~36-40)
         return jpeg_encode(pixels, quality=97)
-    if fmt == "qpng":
-        return qpng_encode(pixels)
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
@@ -145,14 +125,8 @@ def decode(data: bytes, fmt: str) -> np.ndarray:
     if fmt == "png":
         return png_decode(data)
     if fmt == "jpeg":
-        # artifacts written by earlier builds used the qpng stand-in
-        # under the jpeg fmt — sniff the magic for compatibility
-        if data[:4] == b"QPNG":
-            return qpng_decode(data)
         from .jpeg import jpeg_decode
         return jpeg_decode(data)
-    if fmt == "qpng":
-        return qpng_decode(data)
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
@@ -168,9 +142,12 @@ def phash64(pixels: np.ndarray) -> int:
     """8x8 average-hash over the grayscale image → signed int64.
 
     Block-mean downsample to 8x8, threshold at the mean, pack 64 bits
-    row-major MSB-first. Stable under the qpng quantization loss.
-    Vectorized: two reduceat passes + packbits (hot path of the image
-    validation UDF — called once per fetched row).
+    row-major MSB-first. Stable under the JPEG q97 loss up to
+    quantization-borderline bits. Vectorized: two reduceat passes +
+    packbits (hot path of the image validation UDF — called once per
+    fetched row). Under 8 px in a dimension, block starts repeat and
+    reduceat gives such a block one row (column) of the image, so its
+    count is clamped to 1.
     """
     gray = pixels.astype(np.float64).sum(axis=2)  # 3x luminance, scale-free
     h, w = gray.shape
@@ -179,8 +156,8 @@ def phash64(pixels: np.ndarray) -> int:
     col = np.add.reduceat(gray, ys, axis=0)
     blocks = np.add.reduceat(col, xs, axis=1)
     # normalize by true block areas (uneven when 8 ∤ h or 8 ∤ w)
-    hcnt = np.diff(np.append(ys, h))
-    wcnt = np.diff(np.append(xs, w))
+    hcnt = np.maximum(np.diff(np.append(ys, h)), 1)
+    wcnt = np.maximum(np.diff(np.append(xs, w)), 1)
     blocks = blocks / (hcnt[:, None] * wcnt[None, :])
     bits = (blocks > blocks.mean()).flatten()
     val = int.from_bytes(np.packbits(bits).tobytes(), "big")

@@ -8,9 +8,8 @@ emits a spec-compliant JFIF stream (SOI/APP0/DQT/SOF0/DHT/SOS/EOI with
 skip-over for APPn/COM) and inverts entropy coding, dequantization,
 IDCT and color conversion.
 
-This replaces the round-1/2 ``qpng`` stand-in for the ``jpeg`` fmt
-everywhere — fixtures, flagship AND the 120k-row bench — so the
-PSNR ≥ 40 dB fetch invariant (BASELINE.json input_hint) always runs
+It is the codec of the ``jpeg`` fmt everywhere — fixtures, flagship
+AND the 120k-row bench — so the PSNR ≥ 40 dB fetch invariant (BASELINE.json input_hint) always runs
 against real lossy-DCT artifacts. Three decode engines, all feeding
 ONE shared numpy dequant/IDCT/color tail (_assemble_rgb), so they are
 bit-identical by construction:

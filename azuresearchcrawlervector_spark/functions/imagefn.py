@@ -48,11 +48,10 @@ def decode_validate_udf(
     # JPEG rows decode LANE-PARALLEL across the whole Arrow batch
     # (core/jpeg.jpeg_decode_batch — bit-identical to the scalar path,
     # amortizes the per-symbol interpreter cost over the batch); other
-    # formats and legacy QPNG-magic rows stay on the scalar decoders.
+    # formats stay on the scalar decoders.
     from ..core.jpeg import jpeg_decode_batch
 
-    jpeg_ix = [i for i, (buf, f) in enumerate(zip(data, fmt))
-               if f == "jpeg" and bytes(buf[:4]) != b"QPNG"]
+    jpeg_ix = [i for i, f in enumerate(fmt) if f == "jpeg"]
     decoded: dict[int, object] = {}
     if jpeg_ix:
         batch = jpeg_decode_batch([bytes(data.iloc[i]) for i in jpeg_ix])

@@ -3,7 +3,7 @@
 - canonicalization is a pandas UDF over the pure kernel
   (core/urls.py — same code the oracle simulator runs);
 - the 64-bit url hash is Spark's built-in ``xxhash64`` (JVM-side,
-  whole-stage codegen; bit-equal to core/xxh.py, verified in tests);
+  whole-stage codegen) — seeds and discovered links alike;
 - the crawlable-href shape filter (F1) is pure built-ins —
   no Python in that hot path.
 """
@@ -33,7 +33,7 @@ def host_udf(url: pd.Series) -> pd.Series:
 
 def url_hash_col(url: Column | str) -> Column:
     """xxhash64(canonical_url) — Spark built-in, seed 42 (the north_star's
-    64-bit hash). Matches core.xxh.url_hash bit-for-bit."""
+    64-bit hash)."""
     return F.xxhash64(url)
 
 

@@ -457,7 +457,7 @@ def minhash_lsh_pairs(
 
 # ------------------------------------------------------------------ SimHash
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              token_hash: str = "xxh64") -> DataFrame:
+              token_hash: str = "xxhash64") -> DataFrame:
     """SimHash over word tokens: per-token hash, sign-sum per bit, pack.
     Pure built-ins: explode → bit ops → groupBy-sum → pack.
 
@@ -470,7 +470,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     64 × n_docs.
 
     token_hash:
-      - "xxh64" (default): 64-bit xxhash64 tokens — the fast path.
+      - "xxhash64" (default): 64-bit xxhash64 tokens — the fast path.
       - "md5_60": top 60 bits of md5(token) parsed as hex — slightly
         slower but EXACTLY reproducible in ANSI-SQL engines (DuckDB has
         md5 but not xxhash64), used by the driver oracle twin.

@@ -53,26 +53,6 @@ def apply_politeness(
     )
 
 
-def apply_robots_disallow(df: DataFrame, robots: DataFrame | None,
-                          url_col: str = "url") -> DataFrame:
-    """Drop rows whose URL path starts with any robots.txt Disallow
-    prefix for its host. Opt-in: the reference does NOT enforce
-    disallow rules (Abot's IsRespectRobotsDotTextEnabled defaults off
-    and the sitemap/headless crawlers never read them) — this is the
-    production-correct extension over the fixture robots table
-    (FIXTURES.md §3)."""
-    if robots is None:
-        return df
-    dis = robots.select("host", "disallow")
-    joined = df.join(F.broadcast(dis), on="host", how="left")
-    path = F.parse_url(F.col(url_col), F.lit("PATH"))
-    blocked = F.exists(
-        F.coalesce(F.col("disallow"), F.array()),
-        lambda d: path.startswith(d),
-    )
-    return joined.filter(~blocked).drop("disallow")
-
-
 def salted_repartition(df: DataFrame, salt_partitions: int, n_partitions: int | None = None) -> DataFrame:
     """P2: spread a hot host over ``salt_partitions`` tasks while keeping
     host locality for cold hosts: partition by (host, pmod(url_hash, S))."""

@@ -90,9 +90,6 @@ class BloomFilter:
         arr = np.frombuffer(other_bits, dtype=np.uint8) if isinstance(other_bits, (bytes, bytearray)) else other_bits
         np.bitwise_or(self.bits, arr, out=self.bits)
 
-    def fp_rate(self, n_keys: int) -> float:
-        return float((1 - np.exp(-self.k * n_keys / self.n_bits)) ** self.k)
-
 
 def build_partition_sketches(df: DataFrame, hash_col: str, n_bits: int, k: int = 7) -> list[bytes]:
     """Per-partition Bloom bitmaps over ``hash_col`` (mapInPandas), returned

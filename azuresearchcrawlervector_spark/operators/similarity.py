@@ -288,28 +288,20 @@ def write_ivf_partitioned(
 
 def ann_topk_ivf_partitioned(
     spark, path: str, query_vec: list[float], k: int = 10,
-    n_centroids: int = 16, nprobe: int = 4,
-    vec_col: str = "embedding", id_col: str = "vec_id",
+    nprobe: int = 4, vec_col: str = "embedding", id_col: str = "vec_id",
 ) -> DataFrame:
     """IVF ANN over an ivf_cid-partitioned table (write_ivf_partitioned):
     identical results to ivf_topk, but the inverted-list filter becomes
     a partition-pruning predicate instead of a row filter. Centroids
-    come from the build's JSON sidecar (so trained and positional
-    builds probe identically); a sidecar-less legacy table falls back
-    to re-deriving the positional centroids (O(n_centroids) collect)."""
+    come from the build's JSON sidecar, so trained and positional
+    builds probe identically."""
     import json
-    import os
 
-    sidecar = _centroids_sidecar(path)
-    tbl = spark.read.parquet(path)
-    if os.path.exists(sidecar):
-        with open(sidecar) as fh:
-            cents = [(int(c), list(map(float, v)))
-                     for c, v in json.load(fh)["centroids"]]
-    else:
-        cents = _ivf_centroids(tbl, n_centroids, vec_col, id_col)
+    with open(_centroids_sidecar(path)) as fh:
+        cents = [(int(c), list(map(float, v)))
+                 for c, v in json.load(fh)["centroids"]]
     probe = _ivf_probe(cents, query_vec, nprobe)
-    cand = tbl.filter(F.col("ivf_cid").isin(probe))
+    cand = spark.read.parquet(path).filter(F.col("ivf_cid").isin(probe))
     return topk_cosine(cand, query_vec, k, vec_col, id_col)
 
 

@@ -18,8 +18,6 @@ Table layout per crawl under ``root/``:
                                    the seen set is a projection of it)
   documents/delta_{iter}.parquet — append-only output docs
   metrics/delta_{iter}.parquet   — append-only per-partition metrics
-  embed_queue/delta_{iter}.parquet — documents deferred past the per-wave
-                                   embed budget (full rewrite, like pending)
   seen_sketch/shard{s:05d}_v{iter:05d}.bin — seen-sketch shard snapshots
                                    (dirty shards only), plus a
                                    v{iter:05d}.json {shard: file} index
@@ -67,22 +65,17 @@ class Manifest:
     deltas: dict[str, list[str]] = field(default_factory=dict)
     pages_fetched: int = 0      # budget counter (A1 maxPages accounting)
     docs_emitted: int = 0       # successful pages → visit-order seq base
-    pending_count: int = -1     # rows in pending_path (-1 = unknown)
-    # this wave's metrics rows (tiny per-partition counters) ride in the
-    # manifest commit itself — no extra write job per wave; the metrics
-    # TABLE is materialized on demand from the manifest history
+    pending_count: int = 0      # rows in pending_path
+    # this wave's metrics rows (tiny per-partition counters) also ride
+    # in the manifest for the console and per-wave inspection; the
+    # metrics TABLE is the metrics/ delta files
     metrics_rows: list = field(default_factory=list)
     finished: bool = False
-    config_fingerprint: str = ""
     # seen-sketch snapshot: the JSON {shard: file} index of the sketch
     # through this wave. None before the sketch gate; any other value
     # (a missing file, or the single .bin an older engine build wrote)
     # makes the next wave rebuild the sketch from the frontier log
     seen_sketch_path: str | None = None
-    # P3 embed budget: documents fetched but deferred past the per-wave
-    # embed cap (full rewrite per wave, like pending)
-    embed_queue_path: str | None = None
-    embed_queue_count: int = 0
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__, sort_keys=True)

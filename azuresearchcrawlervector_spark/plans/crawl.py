@@ -45,10 +45,10 @@ from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import CrawlConfig, CrawlMode, SeenOn
 from ..core.urls import canonicalize, host_of
-from ..core.xxh import url_hash
 from ..functions.embeddings import make_dual_embed_udf
 from ..functions.html import with_extraction
 from ..functions.imagefn import with_image_validation
@@ -61,17 +61,6 @@ from ..operators.seen import (
 from .checkpoint import PENDING_SCHEMA, Manifest, SnapshotStore
 
 SEEN_SCHEMA = "url_hash long, url string, iter int"
-
-# P3 embed budget: the columns a fetched-but-deferred document needs to
-# be embedded and emitted in a later wave (its image checks ride along,
-# so draining only embeds)
-EMBED_QUEUE_COLS = ("url", "url_hash", "seq", "depth", "priority",
-                    "title", "content", "image_id",
-                    "img_ok", "psnr_db", "caption_ok")
-
-
-METRICS_SCHEMA = ("iter int, partition_id int, urls_in long, deduped long, "
-                  "fetched long, failed long, new_links long, wall_ms double")
 
 # ramp-up waves (pending below this many rows) narrow-coalesce the fetched
 # rows before the UDF stages: they inherit the pages-scan split count, and
@@ -130,18 +119,8 @@ class CrawlResult:
     def metrics(self, spark: SparkSession) -> DataFrame | None:
         # metrics is a parquet delta table (one tiny driver-written file
         # per wave) — reading it never scales with crawl length on the
-        # driver. Manifests written by older engine builds carried the
-        # rows inline instead; fall back to re-materializing those.
-        table = self.store.read_table(spark, self.manifest, "metrics")
-        if table is not None:
-            return table
-        rows = []
-        for mf in self.store.all_manifests():
-            if mf.iter <= self.manifest.iter:
-                rows.extend(tuple(r) for r in mf.metrics_rows)
-        if not rows:
-            return None
-        return spark.createDataFrame(rows, METRICS_SCHEMA)
+        # driver
+        return self.store.read_table(spark, self.manifest, "metrics")
 
     def frontier_log(self, spark: SparkSession) -> DataFrame | None:
         return self.store.read_table(spark, self.manifest, "frontier_log")
@@ -186,6 +165,18 @@ def _compact_deltas(spark: SparkSession, store, table: str,
             spark.read.parquet(*segments).write.mode("overwrite").parquet(l2)
             segments = [l2]
     return segments + tail
+
+
+def _seed_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Seed rows (every pending column but ``url_hash``, in
+    PENDING_SCHEMA order) as a pending table. The hash is added with the
+    links stage's expression, so a seed and a discovered link hash
+    alike."""
+    schema = StructType(
+        [f for f in PENDING_SCHEMA.fields if f.name != "url_hash"])
+    return (spark.createDataFrame(rows, schema)
+            .withColumn("url_hash", url_hash_col("url"))
+            .select(*PENDING_SCHEMA.fieldNames()))
 
 
 def _first_per_url(df: DataFrame) -> DataFrame:
@@ -381,10 +372,10 @@ class CrawlEngine:
             u = canonicalize(None, s)
             if u is None:  # F7 malformed-seed guard (CrawlerMain.cs:271-275)
                 continue
-            rows.append((u, url_hash(u), host_of(u), host_of(u), 0,
+            rows.append((u, host_of(u), host_of(u), 0,
                          f"{i:05d}", "", None, None, 0, 0))
-        df = self.spark.createDataFrame(rows, PENDING_SCHEMA)
-        return df.withColumn("priority", _priority_expr(self.cfg.mode))
+        return _seed_frame(self.spark, rows).withColumn(
+            "priority", _priority_expr(self.cfg.mode))
 
     # ------------------------------------------------------------------ run
     def run(self, resume: bool = False) -> CrawlResult:
@@ -396,9 +387,6 @@ class CrawlEngine:
             m = Manifest(iter=0, pending_path=path, deltas={},
                          pages_fetched=0, pending_count=n)
             self.store.commit(m)
-        if m.pending_count < 0:  # manifest from an older engine build
-            p = self.store.read_pending(self.spark, m)
-            m.pending_count = p.count() if p is not None else 0
         if m.finished:
             return CrawlResult(self.store, m, self.cfg.seen_on_effective)
 
@@ -464,16 +452,16 @@ class CrawlEngine:
         return out
 
     # ------------------------------------------------------------- documents
-    def _check_images(self, w: _Wave, rows: DataFrame, n: int) -> DataFrame:
-        """Image validation of the image_ids of ``rows`` (at most ``n``
-        rows): the per-row PSNR/caption invariant (input_hint). Probes
+    def _check_images(self, w: _Wave, rows: DataFrame) -> DataFrame:
+        """Image validation of the image_ids of the wave's fetch-ok
+        ``rows``: the per-row PSNR/caption invariant (input_hint). Probes
         the big images table with the key set (the bytes column never
         crosses a shuffle) — bucket pruning, then a broadcast key join
         on small sets or an executor-side sketch filter on big ones —
         and runs the decode/PSNR UDF on the matched sliver. Returns the
         COMPACT (image_id, img_ok, psnr_db, caption_ok) rows, persisted
         and materialised; the wave releases the cache."""
-        cfg = self.cfg
+        cfg, n = self.cfg, w.m.pending_count
         images_src = self.images
         if (self._images_bucketed
                 and n < BUCKET_PRUNE_ROWS_PER_BUCKET * cfg.payload_buckets):
@@ -482,7 +470,7 @@ class CrawlEngine:
                 rows.where(F.col("image_id").isNotNull()),
                 F.xxhash64("image_id"), cfg.payload_buckets)
             images_src = prune_by_buckets(images_src, img_buckets)
-        if n <= BROADCAST_WAVE_ROWS:
+        if w.small:
             img_keys = rows.select("image_id").where(
                 F.col("image_id").isNotNull()).distinct()
             # at most one decode task per core: the matched sliver is
@@ -511,18 +499,6 @@ class CrawlEngine:
         checked.count()
         return checked
 
-    @staticmethod
-    def _with_image_checks(rows: DataFrame, checked: DataFrame | None,
-                           small: bool) -> DataFrame:
-        """``rows`` + (img_ok, psnr_db, caption_ok): joined from the
-        compact image checks, NULL when images are not validated."""
-        if checked is None:
-            return (rows.withColumn("img_ok", F.lit(None).cast("boolean"))
-                        .withColumn("psnr_db", F.lit(None).cast("double"))
-                        .withColumn("caption_ok", F.lit(None).cast("boolean")))
-        return rows.join(F.broadcast(checked) if small else checked,
-                         on="image_id", how="left")
-
     def _embed(self, rows: DataFrame) -> DataFrame:
         """The documents of the rows emitted this wave: id = sha2(url,512)
         (T5), truncation-before-embed (T4), dual pseudo-embeddings (S10);
@@ -541,70 +517,8 @@ class CrawlEngine:
             )
         )
 
-    def _read_embed_queue(self, w: _Wave, m: Manifest) -> DataFrame:
-        """The P3 embed queue of ``m``. A queue written by an older build
-        carries no image checks; its rows are checked here, through the
-        same helper a fetch wave uses."""
-        backlog = self.spark.read.parquet(m.embed_queue_path)
-        if "img_ok" in backlog.columns:
-            return backlog
-        n = max(m.embed_queue_count, 1)
-        checked = (self._check_images(w, backlog, n)
-                   if self.validate_images else None)
-        return self._with_image_checks(
-            backlog, checked, n <= BROADCAST_WAVE_ROWS,
-        ).select(*EMBED_QUEUE_COLS)
-
-    def _write_docs(self, w: _Wave, docs: DataFrame,
-                    carry: DataFrame | None) -> tuple[str, str | None, int]:
-        """Write the wave's documents, then the P3 embed-queue rewrite
-        when ``carry`` is given (full rewrite, like pending; its count
-        rides the write). Returns (doc_path, queue_path, queue_n)."""
-        doc_path = self.store.write_delta(docs, "documents", w.i)
-        if carry is None:
-            return doc_path, w.m.embed_queue_path, w.m.embed_queue_count
-        obs = Observation(f"equeue_{w.i}")
-        queue_path = self.store.write_delta(
-            carry.observe(obs, F.count(F.lit(1)).alias("n")),
-            "embed_queue", w.i)
-        return doc_path, queue_path, int(obs.get["n"])
-
-    def _drain_wave(self, m: Manifest) -> Manifest:
-        """P3 drain: fetching is finished but deferred documents remain
-        in the embed queue — emit up to the per-wave budget (by
-        priority) until the queue empties. The queued rows carry their
-        image checks, so a drain wave only embeds. Same commit protocol
-        as a fetch wave: data files first, manifest last; a crash re-runs
-        the drain deterministically."""
-        budget = self.cfg.embed_budget_per_wave
-        w = _Wave(m, i=m.iter + 1, t0=time.monotonic(),
-                  small=budget <= BROADCAST_WAVE_ROWS)
-        try:
-            backlog = self._read_embed_queue(w, m)
-            due = self._topk_by_priority(backlog, budget, w).persist()
-            w.unpersist.append(due)
-            carry = backlog.join(due.select("url_hash"), "url_hash", "left_anti")
-            doc_path, queue_path, queue_n = self._write_docs(
-                w, self._embed(due), carry)
-        finally:
-            w.release()
-        wall_ms = (time.monotonic() - w.t0) * 1000.0
-        met_rows = [[w.i, -1, 0, None, 0, 0, None, wall_ms]]
-        met_path = self.store.write_metrics_rows(met_rows, w.i)
-        m2 = self._commit_manifest(
-            m, {"documents": doc_path, "metrics": met_path},
-            metrics_rows=met_rows, finished=(queue_n == 0),
-            embed_queue_path=queue_path, embed_queue_count=queue_n)
-        self.console.write_debug_line(
-            f"drain wave {w.i}: queue'={queue_n} wall_ms={wall_ms:.0f}")
-        return m2
-
     def _finish(self, m: Manifest) -> Manifest:
-        """Nothing left to fetch: drain the P3 embed queue first, else
-        commit ``m`` as finished."""
-        if (self.cfg.embed_budget_per_wave is not None and not self.dry_run
-                and m.embed_queue_count > 0):
-            return self._drain_wave(m)
+        """Nothing left to fetch: commit ``m`` as finished."""
         m.finished = True
         self.store.commit(m)
         return m
@@ -668,8 +582,7 @@ class CrawlEngine:
                 if self.validate_images and not self.dry_run:
                     # extracted = exactly the fetch-ok rows: same key set
                     images_f = pool.submit(
-                        self._check_images, w,
-                        fetch.filter(F.col("fetch_ok")), m.pending_count)
+                        self._check_images, w, fetch.filter(F.col("fetch_ok")))
                 extracted = stage("extract", self._extract, fetch)
                 docs_f = pool.submit(self._emit_docs, w, extracted, images_f)
                 children = stage(
@@ -854,13 +767,12 @@ class CrawlEngine:
         return extracted
 
     def _emit_docs(self, w: _Wave, extracted: DataFrame,
-                   images_f: Future | None) -> tuple[str, str | None, int]:
+                   images_f: Future | None) -> str:
         """The docs branch, run as ONE pool task: visit-order seq, F4
         empty-content skip, the image checks joined in (``images_f``
-        yields them; None = not validated), the P3 embed budget split,
-        embedding, then the documents write and the embed-queue rewrite.
-        Returns _write_docs' (doc_path, queue_path, queue_n)."""
-        cfg, m = self.cfg, w.m
+        yields the compact checks; None = not validated, the columns are
+        NULL), embedding, then the documents write. Returns its path."""
+        m = w.m
         # visit order (oracle contract): seq = emitted_so_far + rank(priority),
         # computed WITHOUT a global single-partition sort: the wave is
         # already range-partitioned by priority (cached, so partition
@@ -885,35 +797,26 @@ class CrawlEngine:
                         + F.lit(m.docs_emitted)).cast("int"))
         else:
             extracted_seq = extracted.withColumn("seq", F.lit(None).cast("int"))
-        emit_cand = self._with_image_checks(
-            extracted_seq.filter(F.length("content") > 0),
-            images_f.result() if images_f is not None else None, w.small)
-
-        # P3 embed budget (opt-in): at most embed_budget_per_wave docs
-        # are embedded+emitted this wave, the rest defer BY PRIORITY to
-        # the embed queue (drained by _drain_wave once fetching is done).
-        budget = None if self.dry_run else cfg.embed_budget_per_wave
-        if budget is not None:
-            emit_cand = emit_cand.select(*EMBED_QUEUE_COLS)
-            if m.embed_queue_path:
-                emit_cand = self._read_embed_queue(w, m).unionByName(emit_cand)
-            due_docs = self._topk_by_priority(emit_cand, budget, w).persist()
-            w.unpersist.append(due_docs)
-            carry_docs = emit_cand.join(
-                due_docs.select("url_hash"), "url_hash", "left_anti")
+        emit = extracted_seq.filter(F.length("content") > 0)
+        if images_f is None:
+            emit = (emit.withColumn("img_ok", F.lit(None).cast("boolean"))
+                        .withColumn("psnr_db", F.lit(None).cast("double"))
+                        .withColumn("caption_ok", F.lit(None).cast("boolean")))
         else:
-            due_docs, carry_docs = emit_cand, None
-        docs_out = self._embed(due_docs)
+            checked = images_f.result()
+            emit = emit.join(F.broadcast(checked) if w.small else checked,
+                             on="image_id", how="left")
+        docs_out = self._embed(emit)
         if self.dry_run:
             docs_out = docs_out.limit(0)
-        return self._write_docs(w, docs_out, carry_docs)
+        return self.store.write_delta(docs_out, "documents", w.i)
 
     def _discover_links(self, w: _Wave, extracted: DataFrame) -> DataFrame:
         """Child frontier rows of the wave's pages: A2 depth gate
         (links followed only below max_depth), F5/F6 selector, F1 shape
         filter, the J4 canonical url/host the extraction pass already
-        resolved, F2 same-host, opt-in robots Disallow, then within-wave
-        first-discovery dedup. No Python runs here."""
+        resolved, F2 same-host, then within-wave first-discovery
+        dedup. No Python runs here."""
         cfg = self.cfg
         links = (
             extracted.filter(F.col("depth") < cfg.max_depth)
@@ -936,9 +839,6 @@ class CrawlEngine:
         )
         if cfg.same_host_only:
             links = links.filter(F.col("host") == F.col("root_host"))
-        if cfg.respect_robots_disallow and self.robots is not None:
-            from ..operators.politeness import apply_robots_disallow
-            links = apply_robots_disallow(links, self.robots)
         children = (
             links.withColumn("depth", F.col("parent_depth") + 1)
             .withColumn("link_pos", F.col("lnk.link_pos"))
@@ -1091,7 +991,7 @@ class CrawlEngine:
         sk_f = (pool.submit(self._merge_seen_delta, seen_delta, i)
                 if sketch is not None else None)
         log_path = log_f.result()
-        doc_path, queue_path, queue_n = docs_f.result()
+        doc_path = docs_f.result()
         pending_path, pending_next_n, new_links_n = pend_f.result()
         # a wave before the gate references no snapshot: one left from
         # an earlier run would miss this wave's delta
@@ -1127,8 +1027,6 @@ class CrawlEngine:
             pending_count=pending_next_n,
             metrics_rows=met_rows,
             seen_sketch_path=sketch_path,
-            embed_queue_path=queue_path,
-            embed_queue_count=queue_n,
         )
         self._sketch_index = sketch_index
         return m2
@@ -1136,11 +1034,8 @@ class CrawlEngine:
 
 def _sitemap_seed_rows(root_url: str, lookup: dict[str, str],
                        same_host_only: bool) -> list[tuple]:
-    """Discovery → PENDING_SCHEMA seed rows for ONE root: the shared
-    pure kernel behind both the driver loop (run_sitemap_crawl on a
-    dict) and the executor-side per-host task
-    (sitemap_seeds_distributed) — one code path, so the two modes are
-    order-identical by construction. ``lookup`` keys are lowercased
+    """Discovery → seed rows for ONE root, in document order, as
+    _seed_frame takes them (no url_hash). ``lookup`` keys are lowercased
     sitemap URLs."""
     from ..sources.sitemap import discover_sitemap_urls
 
@@ -1154,54 +1049,9 @@ def _sitemap_seed_rows(root_url: str, lookup: dict[str, str],
         if same_host_only and host_of(u) != root_host:
             continue  # F2 same-host filter (SitemapCrawler.cs:159-163)
         seen_urls.add(u)
-        rows.append((u, url_hash(u), host_of(u), root_host, 0,
+        rows.append((u, host_of(u), root_host, 0,
                      f"{pos:09d}", f"{pos:09d}", None, pos, 0, 0))
     return rows
-
-
-def sitemap_seeds_distributed(
-    spark: SparkSession,
-    roots: list[str],
-    bodies: DataFrame,
-    same_host_only: bool = True,
-) -> DataFrame:
-    """Executor-side sitemap discovery for many-host sites runs
-    (round-3 VERDICT #7): ``bodies`` is a (url, body) table of sitemap
-    documents; each HOST's documents are grouped to one task
-    (applyInPandas) which runs the identical discovery kernel the
-    driver path uses — document order per host is preserved via the
-    emitted path/priority/link_pos columns, and a thousand-host sites
-    file discovers in parallel instead of a serial driver loop.
-
-    Grouping key is the host of the sitemap URL joined to the root
-    with the same host, so the scheme assumes per-host sitemap
-    locality (a sitemapindex referencing another host's XML won't see
-    that body) — standard real-world layout and the fixtures' shape;
-    the driver path remains the general fallback. One root per host.
-    """
-    root_rows = []
-    for r in roots:
-        c = canonicalize(None, r)
-        if c is not None:
-            root_rows.append((r, host_of(c)))
-    roots_df = spark.createDataFrame(root_rows, "root_url string, host string")
-
-    def kernel(pdf):
-        import pandas as pd
-        root = pdf["root_url"].iloc[0]
-        lookup = {str(u).lower(): str(b)
-                  for u, b in zip(pdf["url"], pdf["body"])}
-        rows = _sitemap_seed_rows(root, lookup, same_host_only)
-        return pd.DataFrame(
-            rows, columns=[f.name for f in PENDING_SCHEMA.fields])
-
-    from ..functions.urls import host_udf
-    return (
-        bodies.withColumn("host", host_udf(F.col("url")))
-        .join(F.broadcast(roots_df), "host")
-        .groupBy("root_url")
-        .applyInPandas(kernel, PENDING_SCHEMA)
-    )
 
 
 def run_sitemap_crawl(
@@ -1209,29 +1059,21 @@ def run_sitemap_crawl(
     pages: DataFrame,
     cfg: CrawlConfig,
     checkpoint_dir: str,
-    sitemap_bodies: dict[str, str] | DataFrame,
+    sitemap_bodies: dict[str, str],
     images: DataFrame | None = None,
     robots: DataFrame | None = None,
     **engine_kw,
 ) -> CrawlResult:
-    """Sitemap mode (O3): discovery over the per-host sitemap documents,
-    then the SAME wave engine fetches the discovered URLs in document
-    order. No link following (the reference sitemap crawler never
-    extracts links), no politeness delay.
-
-    ``sitemap_bodies`` as a dict runs the reference-faithful driver
-    loop (a handful of small XMLs — the reference is sequential here
-    too, SitemapCrawler.cs:204-274); as a (url, body) DataFrame the
-    discovery runs executor-side (sitemap_seeds_distributed) — same
-    kernel, same seeds, parallel across hosts.
+    """Sitemap mode (O3): discovery over the root's sitemap documents
+    (``sitemap_bodies``: sitemap URL → body) on the driver — a handful
+    of small XMLs, and the reference is sequential here too
+    (SitemapCrawler.cs:204-274) — then the SAME wave engine fetches the
+    discovered URLs in document order. No link following (the reference
+    sitemap crawler never extracts links), no politeness delay.
     """
-    if isinstance(sitemap_bodies, DataFrame):
-        seed = sitemap_seeds_distributed(
-            spark, [cfg.root_url], sitemap_bodies, cfg.same_host_only)
-    else:
-        lookup = {k.lower(): v for k, v in sitemap_bodies.items()}
-        rows = _sitemap_seed_rows(cfg.root_url, lookup, cfg.same_host_only)
-        seed = spark.createDataFrame(rows, PENDING_SCHEMA)
+    lookup = {k.lower(): v for k, v in sitemap_bodies.items()}
+    seed = _seed_frame(
+        spark, _sitemap_seed_rows(cfg.root_url, lookup, cfg.same_host_only))
     sm_cfg = CrawlConfig(
         root_url=cfg.root_url, mode=CrawlMode.SITEMAP, max_pages=cfg.max_pages,
         max_depth=0, dom_selector=cfg.dom_selector,

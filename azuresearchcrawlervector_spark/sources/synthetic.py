@@ -198,11 +198,10 @@ def bench_images_df(spark: SparkSession, pages: DataFrame,
                    "fmt": [], "caption": [], "phash": []}
             for iid, url in zip(pdf["image_id"], pdf["url"]):
                 px = generate_pixels(iid, w, h)
-                # REAL baseline JPEG for the lossy half (round-4 #3):
-                # the LUT entropy decoder (core/jpeg.py) runs at
-                # several hundred images/s/core, so the 120k-row crawl
-                # bench now validates actual lossy-DCT artifacts
-                # (PSNR >= 40 dB at q97) instead of the qpng stand-in
+                # REAL baseline JPEG for the lossy half: the LUT entropy
+                # decoder (core/jpeg.py) runs at several hundred
+                # images/s/core, so the 120k-row crawl bench validates
+                # actual lossy-DCT artifacts (PSNR >= 40 dB at q97)
                 fmt = fmt_for(url)
                 out["image_id"].append(iid)
                 out["bytes"].append(encode(px, fmt))

@@ -74,9 +74,9 @@ def _run_crawl(spark, work, tag, pages_r, images_r, robots, n_hosts,
         F.count("*").alias("n"),
         F.sum(F.col("img_ok").cast("long")).alias("ok"),
     ).collect()[0]
-    # jpeg slice: since round 4 the lossy half of the bench payload is
-    # REAL baseline JPEG (not the qpng stand-in), so image_rows_jpeg_ok
-    # counts PSNR-validated real lossy-DCT artifacts
+    # jpeg slice: the lossy half of the bench payload is REAL baseline
+    # JPEG, so image_rows_jpeg_ok counts PSNR-validated real lossy-DCT
+    # artifacts
     jp = (
         docs.join(images_r.select("image_id", "fmt"), "image_id")
         .filter(F.col("fmt") == "jpeg")

@@ -23,6 +23,11 @@ def test_images_dispatch_and_sniff():
         decode(BMP_1X1, "bmp")
     # decode dispatches on fmt, never on the bytes: a BMP payload
     # labelled as a payload format fails that format's parser
-    for fmt in ("png", "jpeg", "qpng"):
+    for fmt in ("png", "jpeg"):
         with pytest.raises(ValueError):
             decode(BMP_1X1, fmt)
+    # the retired qpng codec is an unknown fmt both ways
+    with pytest.raises(ValueError, match="unknown fmt 'qpng'"):
+        encode(px, "qpng")
+    with pytest.raises(ValueError, match="unknown fmt 'qpng'"):
+        decode(BMP_1X1, "qpng")

@@ -114,3 +114,27 @@ def test_cli_errors_via_console():
     assert rc == 2
     assert con.lines and con.lines[0][0] == LogLevel.ERROR
     assert "invalid rootUri" in con.lines[0][1]
+
+
+def test_cli_sitemap_mode_exits_before_spark(monkeypatch, tmp_path):
+    """The CLI takes no sitemap documents, and without them the engine
+    would run a link-following crawl in SITEMAP mode: sitemap mode, with
+    --rootUri or --sitesFile, exits 2 before a Spark session starts."""
+    from azuresearchcrawlervector_spark import session
+    from azuresearchcrawlervector_spark.core.console import (
+        CapturingConsole, LogLevel,
+    )
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    sites = tmp_path / "sites.json"
+    sites.write_text('[{"uri": "http://x.com"}]')
+    for seed in (["--rootUri", "http://x.com"], ["--sitesFile", str(sites)]):
+        con = CapturingConsole()
+        rc = main([*seed, "--crawlMode", "sitemap", "--pagesParquet", "p",
+                   "--checkpointDir", str(tmp_path / "ckpt")], console=con)
+        assert rc == 2
+        assert con.lines[0][0] == LogLevel.ERROR
+        assert "sitemap" in con.lines[0][1]

@@ -344,8 +344,7 @@ def test_ann_ivf_partitioned_pruning(spark, embs, tmp_path):
     q = [float(x) for x in embs.filter("vec_id = 0").collect()[0]["embedding"]]
     path = str(tmp_path / "emb_by_ivf")
     write_ivf_partitioned(embs, path, n_centroids=16)
-    part = ann_topk_ivf_partitioned(spark, path, q, k=10, n_centroids=16,
-                                    nprobe=4)
+    part = ann_topk_ivf_partitioned(spark, path, q, k=10, nprobe=4)
     a = [(r["vec_id"], r["cosine"]) for r in part.collect()]
     b = [(r["vec_id"], r["cosine"])
          for r in ivf_topk(embs, q, k=10, n_centroids=16, nprobe=4).collect()]
@@ -417,8 +416,7 @@ def test_ivf_trained_partitioned_roundtrip(spark, embs, tmp_path):
     q = [float(x) for x in embs.filter("vec_id = 0").collect()[0]["embedding"]]
     path = str(tmp_path / "emb_by_ivf_tr")
     write_ivf_partitioned(embs, path, n_centroids=16, centroids="trained")
-    part = ann_topk_ivf_partitioned(spark, path, q, k=10, n_centroids=16,
-                                    nprobe=4)
+    part = ann_topk_ivf_partitioned(spark, path, q, k=10, nprobe=4)
     a = [(r["vec_id"], r["cosine"]) for r in part.collect()]
     b = [(r["vec_id"], r["cosine"])
          for r in ivf_topk(embs, q, k=10, n_centroids=16, nprobe=4,

@@ -2,13 +2,13 @@
 decoded-pixel allclose / PSNR ≥ 40 dB lossy, caption equality)."""
 
 import struct
+import warnings
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from azuresearchcrawlervector_spark.core.images import (
-    generate_pixels, phash64, png_decode, png_encode, psnr,
-    qpng_decode, qpng_encode,
+    decode, encode, generate_pixels, phash64, png_decode, png_encode, psnr,
 )
 from azuresearchcrawlervector_spark.functions.imagefn import with_image_validation
 from azuresearchcrawlervector_spark.sources.fixtures import (
@@ -22,23 +22,41 @@ def test_png_lossless_roundtrip():
     assert np.array_equal(png_decode(png_encode(px)), px)
 
 
-def test_qpng_lossy_psnr_above_threshold():
-    px = generate_pixels("img-lossy", 64, 48)
-    dec = qpng_decode(qpng_encode(px))
-    assert not np.array_equal(dec, px)  # genuinely lossy
-    assert psnr(px, dec) >= 40.0        # the input_hint invariant
-    assert psnr(px, px) == float("inf")
-
-
 def hamming64(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
 def test_phash_stable_under_quantization():
-    # borderline blocks may flip under the quantization loss — phash
-    # comparisons are hamming-distance comparisons, not equality
+    # borderline blocks may flip under the JPEG quantization loss —
+    # phash comparisons are hamming-distance comparisons, not equality
     px = generate_pixels("img-phash", 32, 24)
-    assert hamming64(phash64(px), phash64(qpng_decode(qpng_encode(px)))) <= 2
+    assert hamming64(phash64(px), phash64(decode(encode(px, "jpeg"),
+                                                 "jpeg"))) <= 2
+
+
+def test_phash_values_pinned():
+    # at least 8 px each way every block has its own rows and columns:
+    # these hashes (fixture sizes 32x24 and 64x48, plus edge shapes)
+    # must never change
+    want = [("img-a", 32, 24, 1235826020518686619),
+            ("img-b", 32, 24, 518062652256085791),
+            ("img-a", 64, 48, 1370951532806369211),
+            ("img-b", 64, 48, 517921897590023999),
+            ("img-c", 8, 8, 6953561188147919075),
+            ("img-c", 9, 13, -1116891577483002655),
+            ("img-d", 37, 23, -8207415542725788185),
+            ("img-d", 33, 17, 1015956493021158775)]
+    for iid, w, h, ph in want:
+        assert phash64(generate_pixels(iid, w, h)) == ph, (iid, w, h)
+
+
+def test_phash_small_images_no_warning():
+    # under 8 px a block start repeats: no division by a zero count
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for w, h in ((1, 1), (1, 20), (4, 20), (7, 7)):
+            ph = phash64(generate_pixels("img-small", w, h))
+            assert -(1 << 63) <= ph < (1 << 63)
 
 
 def test_pixel_generation_deterministic():
@@ -86,15 +104,25 @@ def test_corrupt_bytes_flagged_not_crashing(spark):
            + struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 2835, 2835,
                          0, 0)
            + bytes([214, 208, 156, 0]))
+    # the retired qpng codec (quantized PNG behind a QPNG magic), which
+    # reads within PSNR 40 of its image: no longer a format, nor a
+    # payload the jpeg parser accepts
+    def qpng(iid):
+        px = generate_pixels(iid, 16, 16)
+        return bytearray(b"QPNG" + png_encode(px // 4 * 4))
+
     df = spark.createDataFrame(
         [("img-bad", bytearray(b"garbage"), "png"),
          ("img-tiff", bytearray(tiff), "tiff"),
          ("img-gif", bytearray(gif), "gif"),
-         ("img-bmp", bytearray(bmp), "bmp")],
+         ("img-bmp", bytearray(bmp), "bmp"),
+         ("img-qpng", qpng("img-qpng"), "qpng"),
+         ("img-qpng-jpeg", qpng("img-qpng-jpeg"), "jpeg")],
         "image_id string, bytes binary, fmt string",
     )
     rows = {r["image_id"]: r for r in with_image_validation(df).collect()}
-    for iid in ("img-bad", "img-tiff", "img-gif", "img-bmp"):
+    for iid in ("img-bad", "img-tiff", "img-gif", "img-bmp", "img-qpng",
+                "img-qpng-jpeg"):
         assert rows[iid]["img_ok"] is False
         assert rows[iid]["psnr_db"] is None
 
@@ -145,7 +173,6 @@ def test_jpeg_marker_structure_and_psnr():
 def test_jpeg_error_paths_and_legacy_qpng_sniff():
     import pytest
 
-    from azuresearchcrawlervector_spark.core.images import decode, qpng_encode
     from azuresearchcrawlervector_spark.core.jpeg import (
         jpeg_decode, jpeg_encode,
     )
@@ -158,10 +185,10 @@ def test_jpeg_error_paths_and_legacy_qpng_sniff():
     # APP0 rewritten as SOF2 → progressive unsupported, clear error
     with pytest.raises(ValueError):
         jpeg_decode(bytes(buf))
-    # fmt="jpeg" artifacts written by older builds carry the QPNG magic
-    legacy = qpng_encode(px)
-    assert np.array_equal(decode(legacy, "jpeg"),
-                          decode(legacy, "qpng"))
+    # the QPNG magic older builds wrote under fmt="jpeg" is not sniffed:
+    # those bytes fail the jpeg parser
+    with pytest.raises(ValueError):
+        decode(b"QPNG" + png_encode(px // 4 * 4), "jpeg")
     # and real jpeg bytes under fmt="jpeg" decode via the real codec
     assert psnr(px, decode(jpeg_encode(px, 97), "jpeg")) >= 40.0
 

@@ -10,11 +10,9 @@ from hypothesis import strategies as st
 from azuresearchcrawlervector_spark.core.embed import pseudo_embed
 from azuresearchcrawlervector_spark.core.htmlkit import extract_page
 from azuresearchcrawlervector_spark.core.images import (
-    QUANT_STEP, generate_pixels, png_decode, png_encode, psnr,
-    qpng_decode, qpng_encode,
+    generate_pixels, png_decode, png_encode,
 )
 from azuresearchcrawlervector_spark.core.urls import canonicalize, href_is_crawlable, host_of
-from azuresearchcrawlervector_spark.core.xxh import xxh64
 from azuresearchcrawlervector_spark.operators.seen import BloomFilter
 
 url_text = st.text(
@@ -41,29 +39,11 @@ def test_href_filter_never_crashes(href):
     assert href_is_crawlable(href) in (True, False)
 
 
-@given(st.binary(min_size=0, max_size=200))
-@settings(max_examples=200)
-def test_xxh64_is_64bit_and_deterministic(data):
-    h = xxh64(data)
-    assert 0 <= h < (1 << 64)
-    assert xxh64(data) == h
-
-
 @given(st.integers(1, 64), st.integers(1, 64), st.text(max_size=12))
 @settings(max_examples=25, deadline=None)
 def test_png_roundtrip_any_size(w, h, seed):
     px = generate_pixels(f"prop-{seed}", w, h)
     assert np.array_equal(png_decode(png_encode(px)), px)
-
-
-@given(st.integers(8, 48), st.integers(8, 48), st.text(max_size=12))
-@settings(max_examples=25, deadline=None)
-def test_qpng_error_bounded(w, h, seed):
-    px = generate_pixels(f"prop-{seed}", w, h)
-    dec = qpng_decode(qpng_encode(px))
-    err = np.abs(px.astype(int) - dec.astype(int)).max()
-    assert err < QUANT_STEP           # quantization bound
-    assert psnr(px, dec) >= 40.0      # the input_hint invariant always holds
 
 
 @given(st.text(max_size=300), st.integers(4, 64))

@@ -137,106 +137,3 @@ def test_relative_loc_resolves_against_root():
         f"{ROOT}/deep/nested/sm.xml": make_urlset(["/page.html"]),
     }
     assert discover_sitemap_urls(ROOT, fetcher(bodies)) == [f"{ROOT}/page.html"]
-
-
-# --------------------------------------- executor-side discovery (r3 #7)
-def _bodies_df(spark, bodies: dict):
-    return spark.createDataFrame(
-        [(u, b) for u, b in bodies.items()], "url string, body string")
-
-
-def test_distributed_seeds_order_identical(spark):
-    """sitemap_seeds_distributed == the driver kernel, row for row,
-    on a nested-index + robots-redirect fixture."""
-    from azuresearchcrawlervector_spark.plans.crawl import (
-        _sitemap_seed_rows, sitemap_seeds_distributed,
-    )
-
-    bodies = {
-        f"{ROOT}/robots.txt": f"User-agent: *\nSitemap: {ROOT}/deep/sm.xml",
-        f"{ROOT}/deep/sm.xml": make_sitemapindex(
-            [f"{ROOT}/a.xml", f"{ROOT}/b.xml"]),
-        f"{ROOT}/a.xml": make_urlset([f"{ROOT}/a1", f"{ROOT}/a2",
-                                      f"{ROOT}/a1"]),
-        f"{ROOT}/b.xml": make_urlset([f"{ROOT}/b1", "http://other.com/x"]),
-    }
-    want = _sitemap_seed_rows(
-        ROOT, {k.lower(): v for k, v in bodies.items()}, True)
-    got = sorted(
-        (tuple(r) for r in
-         sitemap_seeds_distributed(spark, [ROOT], _bodies_df(spark, bodies))
-         .collect()),
-        key=lambda t: t[8])  # link_pos = document order
-    assert [t[:4] + t[4:] for t in got] == [tuple(w) for w in want]
-    assert len(got) == 3  # a1, a2 (dup dropped), b1 (other.com filtered)
-
-
-def test_distributed_seeds_many_hosts(spark):
-    """40-host sites run: every host's seeds match its own driver-loop
-    discovery, in per-host document order — the serial driver loop
-    becomes one parallel applyInPandas pass."""
-    from azuresearchcrawlervector_spark.plans.crawl import (
-        _sitemap_seed_rows, sitemap_seeds_distributed,
-    )
-
-    roots, bodies = [], {}
-    for h in range(40):
-        root = f"http://h{h:03d}.example.com"
-        roots.append(root)
-        bodies[f"{root}/sitemap.xml"] = make_sitemapindex(
-            [f"{root}/s1.xml", f"{root}/s2.xml"])
-        bodies[f"{root}/s1.xml"] = make_urlset(
-            [f"{root}/p{i}" for i in range(3)])
-        bodies[f"{root}/s2.xml"] = make_urlset(
-            [f"{root}/q{i}" for i in range(2)])
-    got = sitemap_seeds_distributed(
-        spark, roots, _bodies_df(spark, bodies)).collect()
-    by_host = {}
-    for r in got:
-        by_host.setdefault(r["root_host"], []).append(r)
-    assert len(by_host) == 40
-    for root in roots:
-        low = {k.lower(): v for k, v in bodies.items()
-               if k.lower().startswith(root.lower())}
-        want = _sitemap_seed_rows(root, low, True)
-        host = want[0][2]
-        rows = sorted(by_host[host], key=lambda r: r["link_pos"])
-        assert [(r["url"], r["path"], r["link_pos"]) for r in rows] == \
-            [(w[0], w[5], w[8]) for w in want]
-        assert len(rows) == 5
-
-
-def test_sitemap_crawl_dataframe_bodies_identical(spark, tmp_path):
-    """run_sitemap_crawl produces the identical crawl from dict bodies
-    (driver discovery) and DataFrame bodies (executor discovery)."""
-    g = spa_website()
-    cfg = CrawlConfig(root_url=g.root, mode=CrawlMode.SITEMAP)
-    bodies = {g.root + "/sitemap.xml": make_urlset(g.sitemap_urls)}
-    res_d = run_sitemap_crawl(spark, pages_df(spark, g), cfg,
-                              str(tmp_path / "drv"), sitemap_bodies=bodies,
-                              validate_images=False)
-    res_x = run_sitemap_crawl(spark, pages_df(spark, g), cfg,
-                              str(tmp_path / "exe"),
-                              sitemap_bodies=_bodies_df(spark, bodies),
-                              validate_images=False)
-    a = sorted((r["seq"], r["url"], r["id"])
-               for r in res_d.documents(spark).collect())
-    b = sorted((r["seq"], r["url"], r["id"])
-               for r in res_x.documents(spark).collect())
-    assert a == b and a
-
-
-def test_distributed_seeds_host_without_bodies(spark):
-    """A root whose host has no sitemap documents yields no seeds (same
-    as the driver loop: every probe fetch misses), without disturbing
-    hosts that do."""
-    from azuresearchcrawlervector_spark.plans.crawl import (
-        sitemap_seeds_distributed,
-    )
-
-    bodies = {f"{ROOT}/sitemap.xml": make_urlset([f"{ROOT}/p1"])}
-    got = sitemap_seeds_distributed(
-        spark, [ROOT, "http://empty.example.com"],
-        _bodies_df(spark, bodies)).collect()
-    assert [(r["url"], r["root_host"]) for r in got] == \
-        [(f"{ROOT}/p1", "s.example.com")]

@@ -1,4 +1,4 @@
-"""URL kernel semantics + JVM/Python hash and id parity."""
+"""URL kernel semantics + url hash and document id values."""
 
 import hashlib
 
@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from azuresearchcrawlervector_spark.core.urls import (
     canonicalize, href_is_crawlable, host_of, sitemap_loc_normalize,
 )
-from azuresearchcrawlervector_spark.core.xxh import url_hash, xxh64
+from azuresearchcrawlervector_spark.functions.urls import url_hash_col
 
 
 def test_canonicalize_dotnet_uri_behavior():
@@ -51,29 +51,26 @@ def test_sitemap_loc_normalize():
     assert sitemap_loc_normalize("http://a.com/s.xml", "  ") is None
 
 
-def test_xxh64_known_vectors():
-    # public xxHash reference vectors (seed 0)
-    assert xxh64(b"", seed=0) == 0xEF46DB3751D8E999
-    assert xxh64(b"Nobody inspects the spammish repetition", seed=0) == 0xFBCEA83C8A378BF1
-
-
 def test_hash_and_id_parity_with_spark(spark):
-    urls = [
-        "http://example.com/",
-        "https://h.com/x?q=1",
-        "http://testsite1.example.com/blog/ai-and-webcrawling.html",
-        "a" * 100,  # >32 bytes exercises the 4-lane path
-        "b" * 31,
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    # url_hash = xxHash64 (seed 42) of the UTF-8 url, signed: values
+    # from an independent implementation of the xxHash64 spec
+    want = {
+        "http://example.com/": 1313694010835035713,
+        "https://h.com/x?q=1": 241894204935982930,
+        "http://testsite1.example.com/blog/ai-and-webcrawling.html":
+            -396729683604562161,
+        "a" * 100: -5307276994506690727,  # >32 bytes: the 4-lane path
+        "b" * 31: 688022552932669415,
+    }
+    df = spark.createDataFrame([(u,) for u in want], "url string")
     rows = df.select(
         "url",
-        F.xxhash64("url").alias("h"),
+        url_hash_col("url").alias("h"),
         F.sha2("url", 512).alias("id512"),
         F.sha2("url", 256).alias("id256"),
     ).collect()
     for r in rows:
-        assert r["h"] == url_hash(r["url"]), r["url"]
+        assert r["h"] == want[r["url"]], r["url"]
         # T5: reference id = lowercase hex SHA-512 of URL (Models/WebPage.cs:9-14)
         assert r["id512"] == hashlib.sha512(r["url"].encode()).hexdigest()
         assert r["id256"] == hashlib.sha256(r["url"].encode()).hexdigest()
