@@ -82,7 +82,16 @@ class Manifest:
 
     @staticmethod
     def from_json(text: str) -> "Manifest":
-        return Manifest(**json.loads(text))
+        d = json.loads(text)
+        # manifests of older builds carry fields this one no longer reads
+        # (config_fingerprint, embed_queue_*): name the mismatch
+        unknown = d.keys() - Manifest.__dataclass_fields__.keys()
+        if unknown:
+            raise ValueError(
+                f"checkpoint manifest has fields this build does not read "
+                f"({', '.join(sorted(unknown))}): it was written by an "
+                f"older build; start from a fresh checkpoint directory")
+        return Manifest(**d)
 
 
 class SnapshotStore:

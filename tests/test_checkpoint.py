@@ -100,6 +100,19 @@ def test_truncated_tmp_manifest_ignored(tmp_path):
     assert not list(mdir.glob("*.tmp"))
 
 
+def test_older_build_manifest_rejected_by_name(tmp_path):
+    """A manifest an older build wrote (it carries config_fingerprint
+    and the embed-queue fields) is refused with an error naming the
+    fields, not a TypeError from the dataclass constructor."""
+    store = SnapshotStore(str(tmp_path / "ck"))
+    (tmp_path / "ck" / "manifest" / "v00000.json").write_text(
+        '{"iter": 0, "pending_path": null, "config_fingerprint": "",'
+        ' "embed_queue_path": null, "embed_queue_count": 0}')
+    with pytest.raises(ValueError, match="config_fingerprint, embed_queue_count"
+                       ", embed_queue_path.*older build"):
+        store.latest()
+
+
 @pytest.mark.parametrize("sketch,crash", [
     (False, "documents"), (True, "documents"), (True, "images"),
 ], ids=["no_sketch", "sketch", "images"])
